@@ -20,9 +20,7 @@ __all__ = [
     "quantity_floor",
     "tax_bool_from_percentage",
     "price_changed",
-    "has_all_fields",
     "iso8601_z",
-    "run_id_ts",
     "header_text",
     "body_text",
     "normalize_upc",
@@ -114,27 +112,9 @@ def price_changed(existing: Column, new: Column) -> Column:
     return F.when(e.isNull() | n.isNull(), F.lit(False)).otherwise(e != n)
 
 
-def has_all_fields(category: Column, subcategory: Column, description: Column,
-                   brand: Column | None = None) -> Column:
-    """P10: completeness predicate deciding whether LLM enrichment is needed
-    (reference: batch_processor.py:572-595). Grocery also requires brand."""
-    def present(c: Column) -> Column:
-        return c.isNotNull() & (F.trim(c.cast("string")) != "")
-
-    out = present(category) & present(subcategory) & present(description)
-    if brand is not None:
-        out = out & present(brand)
-    return out
-
-
 def iso8601_z(ts: Column) -> Column:
     """F6: ``%Y-%m-%dT%H:%M:%SZ`` (reference: templatecreation.py:186-192)."""
     return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-
-
-def run_id_ts(ts: Column) -> Column:
-    """F7: ``%Y%m%d_%H%M%S`` run-id prefix (reference: repo.py:75-76)."""
-    return F.date_format(ts, "yyyyMMdd_HHmmss")
 
 
 def header_text(category: Column) -> Column:

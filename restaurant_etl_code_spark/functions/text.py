@@ -18,7 +18,6 @@ __all__ = [
     "tokens",
     "token_count",
     "bpe_token_count",
-    "char_count",
     "punct_ratio",
     "stopword_ratio",
     "quality_score",
@@ -66,10 +65,6 @@ def tokens(c: Column) -> Column:
 
 def token_count(c: Column) -> Column:
     return F.when(F.length(normalize_text(c)) == 0, F.lit(0)).otherwise(F.size(tokens(c)))
-
-
-def char_count(c: Column) -> Column:
-    return F.length(c)
 
 
 def punct_ratio(c: Column) -> Column:

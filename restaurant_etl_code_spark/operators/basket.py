@@ -50,7 +50,6 @@ def _basket_arrays(
     basket_col: str,
     item_col: str,
     max_basket_size: int | None,
-    prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Baskets as sorted distinct item arrays — the ONE basket-key shuffle
     every miner shares: ``collect_set`` dedupes (presence, not
@@ -59,32 +58,10 @@ def _basket_arrays(
     construction. The size valve counts exactly what the row form counted
     (distinct (basket, item) rows — a NULL item is one row there, so it
     contributes 1 to the basket size even though ``collect_set`` drops
-    it).
-
-    ``prefilter_oversized=True`` (r18) additionally drops oversized
-    baskets BEFORE ``collect_set`` builds their array: the default valve
-    filters only after the agg buffer has materialized the full item
-    array, so one pathological basket (a bot account with millions of
-    distinct items) bloats a single task's buffer even though its rows
-    are discarded. The pre-filter is a distinct + counter agg + semi-join
-    — ONE extra exchange of the (basket, item) rows — so it is opt-in:
-    at the measured bench scales the buffer is never the problem and the
-    exchange would be pure regression; switch it on for skew-hostile
-    corpora at 100 TB. Result-identical by construction (the count is
-    over the same distinct (basket, item) rows the valve counts — NULL
-    item included) and pinned by test."""
+    it)."""
     rows = df.select(
         F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
     )
-    if max_basket_size is not None and prefilter_oversized:
-        ok = (
-            rows.distinct()
-            .groupBy("__b")
-            .agg(F.count(F.lit(1)).alias("__sz"))
-            .filter(F.col("__sz") <= max_basket_size)
-            .select("__b")
-        )
-        rows = rows.join(ok, "__b", "left_semi")
     arr = (
         rows.groupBy("__b")
         .agg(
@@ -132,7 +109,6 @@ def cooccurrence_pairs(
     item_col: str,
     min_support: int = 2,
     max_basket_size: int | None = None,
-    prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Frequent item pairs: (item_a, item_b, n_pair, support_a, support_b,
     lift), item_a < item_b, n_pair ≥ min_support.
@@ -140,8 +116,7 @@ def cooccurrence_pairs(
     ``lift = n_pair · n_baskets / (support_a · support_b)`` > 1 means the
     pair co-occurs more than independence predicts.
     """
-    arr = _basket_arrays(df, basket_col, item_col, max_basket_size,
-                         prefilter_oversized)
+    arr = _basket_arrays(df, basket_col, item_col, max_basket_size)
 
     # basket total as a one-row frame cross-joined in at the end — a
     # driver-side .count() here would EXECUTE the whole upstream plan a
@@ -193,7 +168,6 @@ def cooccurrence_triples(
     item_col: str,
     min_support: int = 2,
     max_basket_size: int | None = None,
-    prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Frequent item TRIPLES — the level-3 a-priori step: (item_a <
     item_b < item_c, n_triple ≥ min_support).
@@ -210,8 +184,7 @@ def cooccurrence_triples(
     HAVING — identical rows, quadratically more join work.
     """
     triples, _pairs = _triples_with_pair_counts(
-        df, basket_col, item_col, min_support, max_basket_size,
-        prefilter_oversized,
+        df, basket_col, item_col, min_support, max_basket_size
     )
     return triples
 
@@ -222,14 +195,12 @@ def _triples_with_pair_counts(
     item_col: str,
     min_support: int,
     max_basket_size: int | None,
-    prefilter_oversized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """The level-3 miner, also exposing its INTERNAL frequent-pair counter
     table (item_a < item_b, n_pair ≥ min_support) so rule derivation can
     reuse it — re-deriving pair counts for (A,B)→C confidence was a second
     data-sized basket pass on top of the miner's own (round-4 advisory)."""
-    arr = _basket_arrays(df, basket_col, item_col, max_basket_size,
-                         prefilter_oversized)
+    arr = _basket_arrays(df, basket_col, item_col, max_basket_size)
     frequent = _item_counts(arr).filter(F.col("__n") >= min_support).select("__i")
 
     pair_cand = arr.select(F.explode(F.expr(_PAIRS_EXPR)).alias("__p")).select(

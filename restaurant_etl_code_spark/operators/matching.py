@@ -29,10 +29,9 @@ from restaurant_etl_code_spark.functions import cleansing
 __all__ = [
     "precheck_anti_join",
     "barcode_split",
-    "upc_match",
-    "name_match",
     "match_cascade",
     "change_detect",
+    "latest_op_per_key",
     "cdc_apply",
     "reconcile",
     "fuzzy_name_match",
@@ -59,75 +58,6 @@ def barcode_split(df: DataFrame, code_col: str) -> DataFrame:
         F.when(F.col("upc").isNull(), F.lit(False)).otherwise(cleansing.gtin_valid_expr("upc")),
     )
     return out.withColumn("upc", F.when(F.col("upc_valid"), F.col("upc")))
-
-
-def upc_match(
-    staged: DataFrame,
-    master: DataFrame,
-    staged_upc: str = "upc",
-    master_upc: str = "upc_code",
-    master_cols: dict[str, str] | None = None,
-) -> DataFrame:
-    """J5: broadcast equi-join on the normalized UPC; adds ``match_type='upc'``
-    where the master hit, null where it missed (caller splits). ``master_cols``
-    maps output-name → master-column for the J7 coalesce-priority projection.
-    """
-    m = master.select(
-        F.col(master_upc).alias("__m_upc"),
-        *[F.col(src).alias(f"__m_{dst}") for dst, src in (master_cols or {}).items()],
-    )
-    joined = staged.join(F.broadcast(m), staged[staged_upc] == m["__m_upc"], "left")
-    joined = joined.withColumn(
-        "match_type", F.when(F.col("__m_upc").isNotNull(), F.lit("upc"))
-    )
-    return joined.drop("__m_upc")
-
-
-def name_match(
-    staged: DataFrame,
-    master: DataFrame,
-    staged_name: str,
-    master_name: str,
-    master_cols: dict[str, str] | None = None,
-    match_type: str = "similarity",
-    dedup_order: str | None = None,
-) -> DataFrame:
-    """Exact-name variant of the J6 similarity stage (the degenerate
-    threshold→1.0 case; the vector path lives in operators/similarity.py).
-    Trims both sides (F3) before comparing, as the reference does before its
-    API calls (batcprocessor-allworking…py:385,395). ``dedup_order`` makes
-    the master-side name dedup deterministic (lowest wins) — a plain
-    ``dropDuplicates`` would pick an arbitrary row per name."""
-    m = master.select(
-        F.trim(F.col(master_name)).alias("__m_name"),
-        *( [F.col(dedup_order).alias("__m_ord")] if dedup_order else [] ),
-        *[F.col(src).alias(f"__m_{dst}") for dst, src in (master_cols or {}).items()],
-    )
-    if dedup_order:
-        from pyspark.sql import Window
-
-        wd = Window.partitionBy("__m_name").orderBy("__m_ord")
-        m = (
-            m.withColumn("__m_rn", F.row_number().over(wd))
-            .filter(F.col("__m_rn") == 1)
-            .drop("__m_rn", "__m_ord")
-        )
-    else:
-        m = m.dropDuplicates(["__m_name"])
-    joined = staged.join(F.broadcast(m), F.trim(staged[staged_name]) == m["__m_name"], "left")
-    joined = joined.withColumn(
-        "match_type", F.when(F.col("__m_name").isNotNull(), F.lit(match_type))
-    )
-    return joined.drop("__m_name")
-
-
-def _coalesce_priority(df: DataFrame, cols: list[str]) -> DataFrame:
-    """J7: staged value wins over master value (``mdb.x or master.x``,
-    reference batch_processor.py:1271-1310); name always stays staged."""
-    for c in cols:
-        if f"__m_{c}" in df.columns:
-            df = df.withColumn(c, F.coalesce(F.col(c), F.col(f"__m_{c}"))).drop(f"__m_{c}")
-    return df
 
 
 def match_cascade(
@@ -337,6 +267,24 @@ def fuzzy_name_match(
     )
 
 
+def latest_op_per_key(
+    ops: DataFrame, keys: list[str], order_by: list[str]
+) -> DataFrame:
+    """Each key's latest row of a change log, by ``order_by`` descending
+    (the caller's columns must totally order a key's ops — a change stream
+    always carries (ts, lsn/seq)). One shuffle on the key; the rank-1
+    filter rides Spark's WindowGroupLimit pushdown, so mappers forward one
+    candidate row per key per partition, not the whole log."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
+    return (
+        ops.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def cdc_apply(
     ops: DataFrame,
     keys: list[str],
@@ -350,18 +298,9 @@ def cdc_apply(
     join-based upsert expresses). This is what "apply the CDC feed to the
     table" means in every lakehouse MERGE, stated as a pure relation.
 
-    Keep each key's latest op by ``order_by`` (descending, with the
-    caller-supplied columns providing a total order within the key — a
-    change stream always carries (ts, lsn/seq)), then drop keys whose
-    final op is ``delete_value``. One shuffle on the key; the rank-1
-    filter rides Spark's WindowGroupLimit pushdown, so mappers forward
-    one candidate row per key per partition, not the whole log.
+    Keep each key's latest op (``latest_op_per_key``), then drop keys
+    whose final op is ``delete_value``.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    return (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col(op_col) != delete_value))
-        .drop("__rn")
+    return latest_op_per_key(ops, keys, order_by).filter(
+        F.col(op_col) != delete_value
     )

@@ -132,12 +132,24 @@ def cosine_topk(
             f"> {max_query_rows} rows. Use bucketed_cosine_topk or ivf_topk "
             f"for corpus-sized query sides."
         )
+    id_field = corpus.schema[corpus_id]
+    schema = T.StructType(
+        [
+            T.StructField("query_id", id_field.dataType),
+            T.StructField("neighbor_id", id_field.dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+    if not q_rows:  # nothing to score: no job over the corpus
+        return _ranked(
+            corpus.sparkSession.createDataFrame([], schema),
+            k, min_score, max_score_exclusive,
+        )
     qids = [r[0] for r in q_rows]
     Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
     qn = np.linalg.norm(Q, axis=1)
     qn[qn == 0] = np.nan  # zero-norm queries score null everywhere
     Qhat = (Q.T / qn).T
-    id_field = corpus.schema[corpus_id]
 
     def mapper(batches):
         for pdf in batches:
@@ -172,13 +184,6 @@ def cosine_topk(
                     {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
                 )
 
-    schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType),
-            T.StructField("neighbor_id", id_field.dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
     scored = _widen(corpus.select(corpus_id, corpus_vec), corpus_id, per_row="light").mapInPandas(
         mapper, schema=schema
     )

@@ -4249,10 +4249,7 @@ def _q_mdb_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         mdb_path,
         {"Fournisseurs": "FournisseurID\n1\n", "Articles": csv_text},
     )
-    articles = mdb_src.read_mdb_catalog(
-        spark, mdb_path, "Articles",
-        staging_dir=os.path.join(_SCRATCH_DIR, f"mdb_staging_{tag}"),
-    )
+    articles = mdb_src.read_mdb_catalog(spark, mdb_path, "Articles")
     return articles.groupBy(F.col("Taxe2").alias("taxe2")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("QteMain").cast("decimal(18,2)")).cast("double"), 2)

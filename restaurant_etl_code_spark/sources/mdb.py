@@ -11,11 +11,12 @@ into three pieces:
    byte container so the full path is runnable (and testable) in environments
    without mdbtools — the container format is decoded for real, not monkey-
    patched.
-2. ``read_mdb_catalog`` — single-file driver-side staging: extract → write
-   CSV to a staging dir → the SAME ``read_csv_catalog`` scan (schema +
-   QteMain fill) every other grocery source uses. MDB files are desktop-DB
-   sized (≤2 GB by format), so one driver extraction per file is not a scale
-   problem — the *scan* is still a distributed CSV read.
+2. ``read_mdb_catalog`` — single-file driver-side extraction: the CSV lines
+   stay in memory as a local relation and are parsed by Spark's CSV parser
+   with the same schema + QteMain fill every other grocery source uses. No
+   staging file is written, so nothing is left behind. MDB files are
+   desktop-DB sized (≤2 GB by format), so one driver extraction per file is
+   not a scale problem.
 3. ``read_mdb_catalog_distributed`` — the fan-out path for MANY files: a
    ``binaryFile`` scan ships each file's bytes to an executor, where
    ``mapInPandas`` runs the extractor and parses rows locally. One task per
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 import struct
 import subprocess
@@ -38,9 +40,10 @@ import tempfile
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from restaurant_etl_code_spark import schemas
-from restaurant_etl_code_spark.sources.readers import read_csv_catalog
+from restaurant_etl_code_spark.sources.readers import _fill_quantity
 
 __all__ = [
     "FAKE_MDB_MAGIC",
@@ -155,22 +158,37 @@ def read_mdb_catalog(
     mdb_path: str,
     table: str = "Articles",
     extractor: Extractor | None = None,
-    staging_dir: str | None = None,
 ) -> DataFrame:
-    """S6 single-file path: extract one table to a staged CSV, then run the
-    standard grocery CSV scan (explicit schema + QteMain fill — reference
-    extraction.py:146-155 semantics, including the NaN→0 default)."""
+    """S6 single-file path: extract one table, then parse its CSV text with
+    the standard grocery CSV contract (explicit schema + QteMain fill —
+    reference extraction.py:146-155 semantics, including the NaN→0
+    default).
+
+    The lines are split the way Spark's text input splits a file (CR, LF
+    or CRLF), blank lines and the header row are dropped as its CSV
+    reader does, and ``from_csv`` parses each line with the reader's
+    parser and options. The lines travel as an Arrow-built local
+    relation: no staging file to clean up, no Python worker at scan time,
+    and a size estimate small enough for Catalyst to broadcast it."""
+    import pandas as pd
+
     with open(mdb_path, "rb") as f:
         mdb_bytes = f.read()
     extract = extractor or _sniff_extractor(mdb_bytes)
-    csv_text = extract(mdb_bytes, table)
-    staging = staging_dir or tempfile.mkdtemp(prefix="mdb_staging_")
-    os.makedirs(staging, exist_ok=True)
-    stem = os.path.splitext(os.path.basename(mdb_path))[0]
-    staged_csv = os.path.join(staging, f"{stem}_{table}.csv")
-    with open(staged_csv, "w", encoding="utf-8") as f:
-        f.write(csv_text)
-    return read_csv_catalog(spark, staged_csv)
+    lines = [
+        ln for ln in re.split(r"\r\n|\r|\n", extract(mdb_bytes, table))
+        if ln.strip()
+    ][1:]
+    text = spark.createDataFrame(
+        pd.DataFrame({"value": pd.Series(lines, dtype=object)}), "value string"
+    )
+    ddl = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in schemas.GROCERY_ARTICLES_RAW.fields
+    )
+    return _fill_quantity(
+        text.select(F.from_csv("value", ddl).alias("r")).select("r.*")
+    )
 
 
 def read_mdb_catalog_distributed(

@@ -2,27 +2,31 @@
 
 The reference's sinks are REST/ES calls with upsert-by-id semantics (bulk
 index overwrites by ``_id``, K1; incremental update by key, K9; batch create
-with per-row ``continueOnError`` capture, K8). Without a Delta/Iceberg jar in
-this image, MERGE is emulated on plain parquet with an atomic
-write-temp-then-swap — the emulation keeps MERGE's *semantics* (matched rows
-updated, unmatched inserted) so swapping in Delta later is a one-line change.
+with per-row ``continueOnError`` capture, K8). Without a Delta/Iceberg jar,
+MERGE is emulated on plain parquet in ONE format: a hash-bucketed target
+(``write_merge_target``) whose merges rewrite only the buckets a delta
+touches and swap them in under a lock with a crash-replayable manifest.
+``merge_into_bucketed_parquet`` (upsert) and
+``cdc_merge_into_bucketed_parquet`` (upsert + delete) are two entry points
+to that one merge; both keep MERGE's *semantics* (matched rows updated,
+unmatched inserted, CDC deletes removed), so swapping in Delta later
+changes the body, not the callers.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
     "ingest_table",
     "merge_upsert",
-    "merge_into_parquet",
-    "cdc_merge_into_parquet",
     "write_merge_target",
     "read_bucketed",
     "rebucket",
@@ -38,18 +42,18 @@ __all__ = [
 ]
 
 # ---------------------------------------------------------------------------
-# Bucketed target layout: the scale path for MERGE.
-#
-# A plain-parquet MERGE must rewrite the whole target (below); at 100 TB a
-# 1-row upsert would rewrite 100 TB. The fix mirrors what Delta/Iceberg do
-# with file-level pruning, built from hive partitioning: the target is laid
-# out as  <path>/__bucket=K/...  with K = pmod(xxhash64(keys), n_buckets),
-# and a merge (a) computes the DISTINCT bucket set of the delta (≤ n_buckets
-# scalars — counter-sized collect), (b) reads only those partitions
-# (PartitionFilters prune the rest at file-listing time), (c) rewrites and
-# atomically swaps only those bucket directories. Merge cost scales with
-# |delta| + |touched buckets|, not |target|. xxhash64 is seed-fixed, so the
-# key→bucket map is stable across sessions and writers.
+# The merge-target layout. A whole-table parquet MERGE would rewrite the
+# whole target; at 100 TB a 1-row upsert would rewrite 100 TB. The layout
+# mirrors what Delta/Iceberg do with file-level pruning, built from hive
+# partitioning: the target is  <path>/__bucket=K/...  with
+# K = pmod(xxhash64(keys), n_buckets), and a merge (a) computes the DISTINCT
+# bucket set of the delta (≤ n_buckets scalars — counter-sized collect),
+# (b) reads only those partitions (PartitionFilters prune the rest at
+# file-listing time), (c) rewrites and atomically swaps only those bucket
+# directories. Merge cost scales with |delta| + |touched buckets|, not
+# |target|. xxhash64 is seed-fixed, so the key→bucket map is stable across
+# sessions and writers. ``_bucket_expr`` is the one place the formula lives;
+# other hash-bucketed side tables (the streaming near-dup band index) use it.
 # ---------------------------------------------------------------------------
 
 _BUCKET_COL = "__bucket"
@@ -221,6 +225,7 @@ def rebucket(
     if spec is None:
         raise ValueError(f"{path} is not a bucketed target (no {_BUCKET_SPEC})")
     lock = _acquire_merge_lock(path)
+    trash = f"{path}.__trash_{uuid.uuid4().hex[:8]}"
     try:
         recover_merge_target(path)
         df = read_bucketed(spark, path)
@@ -228,18 +233,20 @@ def rebucket(
             n_buckets = _auto_n_buckets(df)
         tmp = f"{path}.__tmp_{uuid.uuid4().hex[:8]}"
         write_merge_target(df, tmp, spec["keys"], n_buckets)
-        trash = f"{path}.__trash_{uuid.uuid4().hex[:8]}"
         os.rename(path, trash)
         os.rename(tmp, path)
         shutil.rmtree(trash, ignore_errors=True)
         return int(n_buckets)
     finally:
-        # after a successful swap the lock rode the old dir into the trash;
-        # on failure it is still at <path>/_merge.lock — remove either way
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+        # the lock rides the old dir: still at <path> on an early failure,
+        # in the trash when the swap stopped between its two renames (the
+        # next merge restores that table), gone with the trash after a
+        # successful swap — remove it wherever it is
+        for held in (lock, os.path.join(trash, _MERGE_LOCK)):
+            try:
+                os.remove(held)
+            except FileNotFoundError:
+                pass
 
 
 def _replay_swap(
@@ -339,8 +346,8 @@ def recover_merge_target(target_path: str) -> bool:
     see ``_replay_swap``) and clean its tmp/trash dirs; then sweep any
     orphaned pre-manifest scratch dirs. Returns True if an interrupted
     commit was found and completed. Runs automatically at the start of
-    every ``merge_into_bucketed_parquet`` / ``cdc_merge_into_bucketed_parquet``,
-    so a crashed merge heals on the next merge (or on an explicit call)."""
+    every merge, so a crashed merge heals on the next merge (or on an
+    explicit call)."""
     manifest = os.path.join(target_path, _COMMIT_MANIFEST)
     # refuse to recover (or sweep) under a LIVE merge — its tmp dir is in
     # active use; dead-process locks were already reclaimable, so only a
@@ -373,6 +380,87 @@ def recover_merge_target(target_path: str) -> bool:
     return acted
 
 
+def _merge_bucketed(
+    spark: SparkSession,
+    target_path: str,
+    batch: DataFrame,
+    keys: list[str],
+    n_buckets: int | str,
+    is_delete: Column | None = None,
+) -> None:
+    """The one parquet MERGE body. Rows of ``batch`` where the
+    ``is_delete`` predicate holds remove their key from the target; every
+    other row upserts (no predicate: a plain upsert). Only the bucket
+    directories the batch touches — deletes included — are read, merged
+    and swapped in, under the target's merge lock and after healing any
+    interrupted previous commit (``recover_merge_target``). A missing
+    target is created from the upserts, written beside the path and
+    renamed into place so a crash never leaves a half-written target."""
+
+    def upserts(df: DataFrame) -> DataFrame:
+        return df if is_delete is None else df.filter(~is_delete)
+
+    if not os.path.exists(target_path):
+        # a rebucket killed between its two renames left the whole old
+        # table in a trash sibling (the only trash holding a spec): put it
+        # back rather than start a new table from this batch
+        for old in glob.glob(glob.escape(target_path) + ".__trash_*"):
+            if os.path.exists(os.path.join(old, _BUCKET_SPEC)):
+                os.rename(old, target_path)
+                break
+    if not os.path.exists(target_path):
+        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
+        write_merge_target(upserts(batch), tmp, keys, n_buckets)
+        os.rename(tmp, target_path)
+        return
+    spec = _load_bucket_spec(target_path)
+    if spec is None:
+        raise ValueError(
+            f"{target_path} is not a bucketed target (no {_BUCKET_SPEC}); "
+            "rewrite it with write_merge_target first"
+        )
+    if spec["keys"] != keys:
+        raise ValueError(f"bucket spec keys {spec['keys']} != merge keys {keys}")
+    # persist: the batch is evaluated twice (touched-set collect + the
+    # merged write); a non-deterministic source re-evaluated could emit
+    # rows in buckets outside the collected touched set, which the swap
+    # would then silently drop (found in review). Built BEFORE the lock so
+    # a failure here can't leave the lock held (found in review).
+    batch_b = batch.withColumn(
+        _BUCKET_COL, _bucket_expr(keys, spec["n_buckets"])
+    ).persist()
+    lock = _acquire_merge_lock(target_path)
+    try:
+        recover_merge_target(target_path)  # heal any interrupted commit
+        touched = sorted(
+            r[0] for r in batch_b.select(_BUCKET_COL).distinct().collect()
+        )  # ≤ n_buckets scalars
+        if not touched:
+            return
+        upserts_b = upserts(batch_b)
+        if _bucket_dirs(target_path):
+            target_sub = spark.read.parquet(target_path).filter(
+                F.col(_BUCKET_COL).isin(touched)  # PartitionFilters prune the rest
+            )
+            if is_delete is not None:
+                deletes = batch_b.filter(is_delete).select(*keys)
+                target_sub = target_sub.join(F.broadcast(deletes), keys, "left_anti")
+            merged = merge_upsert(target_sub, upserts_b.select(*target_sub.columns), keys)
+        else:  # target exists but is empty on disk (all rows previously deleted)
+            merged = upserts_b
+        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
+        merged.repartition(len(touched), F.col(_BUCKET_COL)).write.mode(
+            "overwrite"
+        ).partitionBy(_BUCKET_COL).parquet(tmp)
+        _swap_buckets(target_path, tmp, touched)
+    finally:
+        batch_b.unpersist()
+        try:
+            os.remove(lock)
+        except FileNotFoundError:
+            pass
+
+
 def merge_into_bucketed_parquet(
     spark: SparkSession,
     target_path: str,
@@ -381,56 +469,13 @@ def merge_into_bucketed_parquet(
     n_buckets: int | str = "auto",
 ) -> None:
     """Partition-pruned MERGE (K1/K7/K9 upsert-by-id semantics,
-    reference api/api-client.py:270-368, batch_processor.py:167-245): only
-    the bucket directories containing updated keys are read, merged, and
-    swapped. First call creates the bucketed layout. Cost: O(|updates| +
-    |touched buckets|) — a 1-row upsert rewrites one bucket, not the table.
-    The sequence runs under the target's merge lock, after healing any
-    interrupted previous commit (``recover_merge_target``)."""
-    if not os.path.exists(target_path):
-        write_merge_target(updates, target_path, keys, n_buckets)
-        return
-    spec = _load_bucket_spec(target_path)
-    if spec is None:
-        raise ValueError(
-            f"{target_path} is not a bucketed target (no {_BUCKET_SPEC}); "
-            "use merge_into_parquet or rewrite it with write_merge_target first"
-        )
-    if spec["keys"] != keys:
-        raise ValueError(f"bucket spec keys {spec['keys']} != merge keys {keys}")
-    n = spec["n_buckets"]
-    # persist: the delta is evaluated twice (touched-set collect + the
-    # merged write); a non-deterministic updates source re-evaluated could
-    # emit rows in buckets outside the collected touched set, which the
-    # swap would then silently drop (found in review). Built BEFORE the
-    # lock so a failure here can't leave the lock held (found in review).
-    upd = updates.withColumn(_BUCKET_COL, _bucket_expr(keys, n)).persist()
-    lock = _acquire_merge_lock(target_path)
-    try:
-        recover_merge_target(target_path)  # heal any interrupted commit
-        touched = sorted(
-            r[0] for r in upd.select(_BUCKET_COL).distinct().collect()
-        )  # ≤ n_buckets scalars
-        if not touched:
-            return
-        if _bucket_dirs(target_path):
-            target_sub = spark.read.parquet(target_path).filter(
-                F.col(_BUCKET_COL).isin(touched)  # PartitionFilters prune the rest
-            )
-            merged = merge_upsert(target_sub, upd.select(*target_sub.columns), keys)
-        else:  # target exists but is empty on disk (all rows previously deleted)
-            merged = upd
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        merged.repartition(len(touched), F.col(_BUCKET_COL)).write.mode(
-            "overwrite"
-        ).partitionBy(_BUCKET_COL).parquet(tmp)
-        _swap_buckets(target_path, tmp, touched)
-    finally:
-        upd.unpersist()
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+    reference api/api-client.py:270-368, batch_processor.py:167-245):
+    ``updates`` rows replace the target rows with the same ``keys`` and
+    the rest are inserted. Cost: O(|updates| + |touched buckets|). The
+    first call creates the bucketed layout (``n_buckets``, default sized
+    from the input); later calls use the layout's recorded bucket count.
+    With a transactional table format this is ``MERGE INTO``."""
+    _merge_bucketed(spark, target_path, updates, keys, n_buckets)
 
 
 def cdc_merge_into_bucketed_parquet(
@@ -443,146 +488,19 @@ def cdc_merge_into_bucketed_parquet(
     delete_value: str = "D",
     n_buckets: int | str = "auto",
 ) -> None:
-    """Delete-aware partition-pruned MERGE: compact the op batch to each
-    key's latest op, then read/rewrite/swap only the buckets named by the
-    batch (upserts AND deletes both touch their key's bucket). Lock +
-    crash recovery as in ``merge_into_bucketed_parquet``."""
-    from pyspark.sql import Window
+    """Delete-aware MERGE: apply a CDC op batch (I/U/D) to the target — the
+    sink-side twin of ``operators.matching.cdc_apply``. The batch is first
+    compacted to each key's LATEST op (a delete followed in the same batch
+    by a re-insert must not win); latest deletes then remove their key and
+    the other latest ops upsert, in the buckets the batch touches. With a
+    transactional table format this is ``MERGE INTO ... WHEN MATCHED AND
+    op = 'D' THEN DELETE``."""
+    from restaurant_etl_code_spark.operators.matching import latest_op_per_key
 
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    latest = (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    _merge_bucketed(
+        spark, target_path, latest_op_per_key(ops, keys, order_by), keys,
+        n_buckets, is_delete=F.col(op_col) == delete_value,
     )
-    upserts = latest.filter(F.col(op_col) != delete_value)
-    if not os.path.exists(target_path):
-        write_merge_target(upserts, target_path, keys, n_buckets)
-        return
-    spec = _load_bucket_spec(target_path)
-    if spec is None:
-        raise ValueError(
-            f"{target_path} is not a bucketed target (no {_BUCKET_SPEC})"
-        )
-    if spec["keys"] != keys:
-        raise ValueError(f"bucket spec keys {spec['keys']} != merge keys {keys}")
-    n = spec["n_buckets"]
-    # persist for the same two-evaluation reason as merge_into_bucketed_parquet;
-    # before the lock so a failure here can't leave the lock held
-    latest_b = latest.withColumn(_BUCKET_COL, _bucket_expr(keys, n)).persist()
-    lock = _acquire_merge_lock(target_path)
-    try:
-        recover_merge_target(target_path)
-        touched = sorted(
-            r[0] for r in latest_b.select(_BUCKET_COL).distinct().collect()
-        )
-        if not touched:
-            return
-        deletes = latest_b.filter(F.col(op_col) == delete_value).select(*keys)
-        upserts_b = latest_b.filter(F.col(op_col) != delete_value)
-        if _bucket_dirs(target_path):
-            target_sub = (
-                spark.read.parquet(target_path)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .join(F.broadcast(deletes), keys, "left_anti")
-            )
-            merged = merge_upsert(
-                target_sub, upserts_b.select(*target_sub.columns), keys
-            )
-        else:
-            merged = upserts_b
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        merged.repartition(len(touched), F.col(_BUCKET_COL)).write.mode(
-            "overwrite"
-        ).partitionBy(_BUCKET_COL).parquet(tmp)
-        _swap_buckets(target_path, tmp, touched)
-    finally:
-        latest_b.unpersist()
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
-
-
-def merge_into_parquet(
-    spark: SparkSession, target_path: str, updates: DataFrame, keys: list[str]
-) -> None:
-    """MERGE into a parquet table with atomic swap. If the target does not
-    exist, this is a plain write (first load). If the target was laid out by
-    ``write_merge_target`` the partition-pruned path is taken automatically, so
-    callers (including the streaming foreachBatch sinks) inherit
-    delta-proportional merge cost just by bucketing the target once."""
-    if _load_bucket_spec(target_path) is not None:
-        merge_into_bucketed_parquet(spark, target_path, updates, keys)
-        return
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path)
-        merged = merge_upsert(target, updates, keys)
-    else:
-        merged = updates
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, target_path)
-
-
-def cdc_merge_into_parquet(
-    spark: SparkSession,
-    target_path: str,
-    ops: DataFrame,
-    keys: list[str],
-    order_by: list[str],
-    op_col: str = "op",
-    delete_value: str = "D",
-) -> None:
-    """Delete-aware MERGE: apply a CDC op batch (I/U/D) to a parquet
-    target — the sink-side twin of ``operators.matching.cdc_apply``.
-    The batch is first compacted to each key's LATEST op (a delete that
-    is followed in the same batch by a re-insert must not win), then
-    deletes anti-join out of the target and survivors upsert in; the
-    write lands with the same atomic tmp-swap as ``merge_into_parquet``.
-    With a transactional table format this is ``MERGE INTO ... WHEN
-    MATCHED AND op = 'D' THEN DELETE``. A ``write_merge_target`` target takes
-    the partition-pruned path automatically.
-    """
-    from pyspark.sql import Window
-
-    if _load_bucket_spec(target_path) is not None:
-        cdc_merge_into_bucketed_parquet(
-            spark, target_path, ops, keys, order_by,
-            op_col=op_col, delete_value=delete_value,
-        )
-        return
-
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
-    latest = (
-        ops.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    upserts = latest.filter(F.col(op_col) != delete_value)
-    deletes = latest.filter(F.col(op_col) == delete_value).select(*keys)
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path).join(
-            F.broadcast(deletes), keys, "left_anti"
-        )
-        merged = merge_upsert(target, upserts, keys)
-    else:
-        merged = upserts
-    tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, target_path)
 
 
 def write_failed_rows(
@@ -632,14 +550,16 @@ def retry_failed_minimal(
     the key + ``keep_cols`` survive; every other target column is nulled
     (the ES minimal-doc overwrite-by-_id semantics). Second-chance
     durability beats losing the row."""
-    target = spark.read.parquet(target_path)
+    target = read_bucketed(spark, target_path)
     minimal = failed.select(*keys, *keep_cols)
     for field in target.schema.fields:
         if field.name not in minimal.columns:
             minimal = minimal.withColumn(
                 field.name, F.lit(None).cast(field.dataType)
             )
-    merge_into_parquet(spark, target_path, minimal.select(*target.columns), keys)
+    merge_into_bucketed_parquet(
+        spark, target_path, minimal.select(*target.columns), keys
+    )
 
 
 def write_audit(

@@ -157,12 +157,13 @@ def foreach_batch_upsert(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Exactly-once-ish streaming MERGE sink: each micro-batch upserts into a
-    parquet target via the K8/K9 merge emulation (sources/sinks.py). With a
-    transactional table format this is ``foreachBatch`` + ``MERGE INTO``."""
-    from restaurant_etl_code_spark.sources.sinks import merge_into_parquet
+    bucketed parquet target via the K8/K9 merge emulation (sources/sinks.py;
+    read it back with ``read_bucketed``). With a transactional table format
+    this is ``foreachBatch`` + ``MERGE INTO``."""
+    from restaurant_etl_code_spark.sources.sinks import merge_into_bucketed_parquet
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_into_parquet(batch_df.sparkSession, target_path, batch_df, keys)
+        merge_into_bucketed_parquet(batch_df.sparkSession, target_path, batch_df, keys)
 
     q = (
         streamed.writeStream.foreachBatch(sink)
@@ -184,15 +185,17 @@ def foreach_batch_cdc_apply(
     delete_value: str = "D",
 ) -> StreamingQuery:
     """Streaming CDC apply: each micro-batch of I/U/D ops merges into the
-    parquet target delete-aware (``cdc_merge_into_parquet``). As long as a
-    key's ops arrive in order across micro-batches (the CDC-feed contract),
-    the target converges to exactly ``cdc_apply`` over the full log — the
-    invariant tests/test_round4_ops.py proves end-to-end. Checkpointing
-    makes replays idempotent at the batch level."""
-    from restaurant_etl_code_spark.sources.sinks import cdc_merge_into_parquet
+    bucketed parquet target delete-aware (``cdc_merge_into_bucketed_parquet``).
+    As long as a key's ops arrive in order across micro-batches (the
+    CDC-feed contract), the target converges to exactly ``cdc_apply`` over
+    the full log — the invariant tests/test_round4_ops.py proves
+    end-to-end. Checkpointing makes replays idempotent at the batch level."""
+    from restaurant_etl_code_spark.sources.sinks import (
+        cdc_merge_into_bucketed_parquet,
+    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        cdc_merge_into_parquet(
+        cdc_merge_into_bucketed_parquet(
             batch_df.sparkSession, target_path, batch_df, keys, order_by,
             op_col=op_col, delete_value=delete_value,
         )
@@ -490,6 +493,7 @@ def curate_stream_near_dup(
     from restaurant_etl_code_spark.functions import text as Ftext
     from restaurant_etl_code_spark.operators import dedup as D
     from restaurant_etl_code_spark.sources.sinks import (
+        _bucket_expr,
         merge_into_bucketed_parquet,
     )
 
@@ -547,9 +551,7 @@ def curate_stream_near_dup(
             hit = {
                 r["__b"]
                 for r in banded_d.select(
-                    F.pmod(F.xxhash64("band_hash"), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("__b")
+                    _bucket_expr(["band_hash"], n_buckets).alias("__b")
                 )
                 .distinct()
                 .collect()
@@ -596,10 +598,7 @@ def curate_stream_near_dup(
         # semi-join and its exchange (r18)
         surv_bands = D._banded_rows(
             survivors, id_col, bands, rows_per_band
-        ).withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64("band_hash"), F.lit(n_buckets)).cast("int"),
-        )
+        ).withColumn("__bucket", _bucket_expr(["band_hash"], n_buckets))
         # append bands BEFORE the merge (see crash semantics above);
         # the geometry spec lands first so every later run is checked
         if not os.path.isfile(spec_path):

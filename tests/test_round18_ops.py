@@ -164,47 +164,6 @@ def test_bpe_train_return_state_matches_bpe_apply(spark):
         tuple(r) for r in table.sort("merge_round").collect()]
 
 
-def test_basket_prefilter_oversized_is_result_identical(spark):
-    # r18 (verdict r17 order 8): the opt-in pre-valve drops oversized
-    # baskets BEFORE collect_set materializes their array. Synthetic
-    # mega-basket + duplicates + a NULL item: results must be identical
-    # with and without the pre-filter, and the mega-basket must be
-    # dropped by both (the NULL item counts toward the valve size).
-    from pyspark.sql import functions as F
-
-    from restaurant_etl_code_spark.operators import basket as B
-
-    rows = (
-        [("mega", f"i{k}") for k in range(50)]       # oversized: dropped
-        + [("mega", "i0"), ("mega", None)]           # dups + null ride along
-        + [("b1", x) for x in ("a", "b", "c", "a")]  # dup collapses
-        + [("b2", x) for x in ("a", "b", None)]      # null counts as 1
-        + [("b3", x) for x in ("a", "b", "c")]
-    )
-    df = spark.createDataFrame(rows, "basket string, item string")
-
-    def run(**kw):
-        out = B.cooccurrence_pairs(
-            df, basket_col="basket", item_col="item",
-            min_support=2, max_basket_size=4, **kw)
-        return sorted(tuple(r) for r in out.collect())
-
-    base = run()
-    assert run(prefilter_oversized=True) == base
-    # the mega-basket contributed nothing even to supports
-    items = {r[0] for r in base} | {r[1] for r in base}
-    assert items <= {"a", "b", "c"}
-    # triples path threads the flag too
-    t_base = sorted(tuple(r) for r in B.cooccurrence_triples(
-        df, basket_col="basket", item_col="item",
-        min_support=2, max_basket_size=4).collect())
-    t_pre = sorted(tuple(r) for r in B.cooccurrence_triples(
-        df, basket_col="basket", item_col="item",
-        min_support=2, max_basket_size=4,
-        prefilter_oversized=True).collect())
-    assert t_pre == t_base
-
-
 def test_release_persisted_intermediates_frees_dedup_caches(spark):
     # r17 verdict order 7: two dedup queries composed in one session must
     # not permanently double-hold corpus-sized persisted blocks — the

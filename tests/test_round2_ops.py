@@ -2,7 +2,7 @@
 sampling (operators/sampling.py), repetition signals (operators/corpus.py),
 rolling window stats (operators/temporal.py). Cross-engine value parity is
 covered by the driver gate (`pii_scrub`, `group_sample`,
-`repetition_signals`, `rolling_stats` in tools/oracle_check.py); these
+`repetition_signals`, `rolling_stats` in tools/driver_hash_check.py); these
 tests pin the semantics on hand fixtures."""
 
 from __future__ import annotations

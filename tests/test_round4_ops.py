@@ -49,14 +49,24 @@ def test_mdb_export_tool_requires_binary():
 def test_read_mdb_catalog_fills_quantity(spark, tmp_path):
     p = str(tmp_path / "cat.mdb")
     mdb.write_fake_mdb(p, {"Articles": CSV_ARTICLES})
-    df = mdb.read_mdb_catalog(
-        spark, p, "Articles", staging_dir=str(tmp_path / "staging")
-    )
+    df = mdb.read_mdb_catalog(spark, p, "Articles")
     rows = {r["Article"]: r for r in df.collect()}
     assert set(rows) == {"A1", "A2", "A3"}
     assert rows["A2"]["QteMain"] == 0.0        # ingest default applied
     assert rows["A3"]["PrixVente"] == 9.99
     assert rows["A1"]["Taxe2"] is True
+
+
+def test_read_mdb_catalog_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    p = str(tmp_path / "cat.mdb")
+    mdb.write_fake_mdb(p, {"Articles": CSV_ARTICLES})
+    assert mdb.read_mdb_catalog(spark, p, "Articles").count() == 3
+    assert not list(tmp.glob("mdb_staging_*"))
 
 
 def test_read_mdb_catalog_distributed(spark, tmp_path):
@@ -180,6 +190,25 @@ def test_cosine_topk_guards_large_query_side(spark):
     assert out.count() == 6
 
 
+def test_cosine_topk_empty_query_side_is_typed_empty(spark):
+    # every staged row matched upstream leaves no query: an empty, typed
+    # result, and no job over the corpus (its UDF would raise if scanned)
+    emb = spark.range(5).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
+    )
+
+    @F.udf("array<double>")
+    def boom(v):
+        raise RuntimeError("corpus scanned")
+
+    corpus = emb.select("vec_id", boom("embedding").alias("embedding"))
+    out = similarity.cosine_topk(emb.limit(0), corpus, k=2)
+    assert out.collect() == []
+    assert out.schema == similarity.cosine_topk(emb.limit(1), emb, k=2).schema
+    assert out.columns == ["query_id", "neighbor_id", "score", "rank"]
+
+
 def test_heavy_hitters_clamps_undersized_summary(spark):
     # 400 'hot' rows + 200 singletons; threshold 100 -> k floor = 6.
     # summary_size=1 would break the Misra-Gries superset guarantee when the
@@ -205,7 +234,7 @@ def test_quantile_bucket_rejects_pathological_bins(spark):
 def test_plan_audit_round4_surfaces(spark):
     """The physical plans this round touched must stay the designed plans:
     TakeOrdered quantizer (no global window), banded equi-join (no all-pairs),
-    executor-side byte decode, staged-CSV scan shape."""
+    executor-side byte decode, in-memory MDB CSV parse."""
     import sys
     from pathlib import Path
 
@@ -458,6 +487,7 @@ def test_streaming_cdc_apply_converges_to_batch_snapshot(spark, tmp_path):
     import os as _os
 
     from restaurant_etl_code_spark.operators import matching
+    from restaurant_etl_code_spark.sources.sinks import read_bucketed
     from restaurant_etl_code_spark.streaming import foreach_batch_cdc_apply
 
     log = [
@@ -492,7 +522,7 @@ def test_streaming_cdc_apply_converges_to_batch_snapshot(spark, tmp_path):
 
     got = {
         r["k"]: (r["op"], r["value"])
-        for r in spark.read.parquet(target).collect()
+        for r in read_bucketed(spark, target).collect()
     }
     batch = {
         r["k"]: (r["op"], r["value"])

@@ -71,21 +71,6 @@ def test_bucketed_merge_only_rewrites_touched_buckets(spark, tmp_path):
     assert got[42] == 4200.0 and len(got) == 1000
 
 
-def test_merge_into_parquet_autodetects_bucketed_target(spark, tmp_path):
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame([(i, float(i)) for i in range(50)], "k int, v double")
-    sinks.write_merge_target(base, path, ["k"], n_buckets=4)
-    before = _bucket_files(path)
-    upd = spark.createDataFrame([(0, -1.0)], "k int, v double")
-    sinks.merge_into_parquet(spark, path, upd, ["k"])  # generic entry point
-    after = _bucket_files(path)
-    # pruned path taken: at least one bucket dir untouched byte-for-byte
-    same = [k for k in before if k in after and before[k] == after[k]]
-    assert same, "autodetect failed: every file was rewritten"
-    got = {r["k"]: r["v"] for r in sinks.read_bucketed(spark, path).collect()}
-    assert got[0] == -1.0 and len(got) == 50
-
-
 def test_bucketed_cdc_merge_deletes_and_upserts(spark, tmp_path):
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
@@ -101,7 +86,7 @@ def test_bucketed_cdc_merge_deletes_and_upserts(spark, tmp_path):
         ],
         "k int, v double, ts int, op string",
     )
-    sinks.cdc_merge_into_parquet(spark, path, ops, ["k"], ["ts"])
+    sinks.cdc_merge_into_bucketed_parquet(spark, path, ops, ["k"], ["ts"])
     got = {r["k"]: r["v"] for r in sinks.read_bucketed(spark, path).collect()}
     assert 5 not in got
     assert got[6] == 66.0 and got[77] == 77.0 and got[8] == 88.0
@@ -113,7 +98,7 @@ def test_bucketed_cdc_delete_can_empty_a_bucket(spark, tmp_path):
     base = spark.createDataFrame([(1, 1.0, 0)], "k int, v double, ts int")
     sinks.write_merge_target(base, path, ["k"], n_buckets=4)
     ops = spark.createDataFrame([(1, 0.0, 1, "D")], "k int, v double, ts int, op string")
-    sinks.cdc_merge_into_parquet(spark, path, ops, ["k"], ["ts"])
+    sinks.cdc_merge_into_bucketed_parquet(spark, path, ops, ["k"], ["ts"])
     assert sinks.read_bucketed(spark, path).count() == 0
 
 

@@ -184,6 +184,35 @@ def test_rebucket_resizes_and_preserves_rows(spark, tmp_path):
     assert sinks.read_bucketed(spark, path).filter("k = 7").first()["name"] == "seven"
 
 
+def test_rebucket_crash_between_renames_loses_no_rows(spark, tmp_path, monkeypatch):
+    # rebucket swaps the whole table with two renames (live -> trash,
+    # tmp -> live); a kill between them leaves no table at the path. The
+    # next merge must restore the old table, not start one from its delta
+    # (the merge after that would sweep the stranded rows).
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k int, name string")
+    sinks.write_merge_target(df, path, ["k"], n_buckets=4)
+    real_rename = os.rename
+    calls = {"n": 0}
+
+    def dying_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("boom")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dying_rename)
+    with pytest.raises(OSError):
+        sinks.rebucket(spark, path, n_buckets=8)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)
+    for k in (1000, 1001):
+        upd = spark.createDataFrame([(k, "new")], "k int, name string")
+        sinks.merge_into_bucketed_parquet(spark, path, upd, ["k"])
+    got = {r["k"]: r["name"] for r in sinks.read_bucketed(spark, path).collect()}
+    assert len(got) == 102 and got[99] == "v99" and got[1001] == "new"
+
+
 # ---------------------------------------------------------------------------
 # minipdf: PDF 1.5 xref streams + object streams
 # ---------------------------------------------------------------------------

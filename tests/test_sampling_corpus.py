@@ -1,6 +1,6 @@
 """Tests for operators/sampling.py (hash splits) and operators/corpus.py
 (TF-IDF). The portable-hash oracle parity is covered by the driver gate
-(`stratified_split`, `tfidf_top_terms` in tools/oracle_check.py); these
+(`stratified_split`, `tfidf_top_terms` in tools/driver_hash_check.py); these
 tests cover the production xxhash64 path and the scale levers that have no
 SQL twin."""
 

@@ -29,13 +29,15 @@ def test_merge_upsert_updates_and_inserts(spark):
     assert got == {1: 10.0, 2: 25.0, 3: 30.0}
 
 
-def test_merge_into_parquet_roundtrip(spark, tmp_path):
+def test_bucketed_merge_roundtrip_creates_layout(spark, tmp_path):
     path = str(tmp_path / "t")
     first = spark.createDataFrame([(1, 10.0)], "k int, price double")
-    sinks.merge_into_parquet(spark, path, first, ["k"])
+    sinks.merge_into_bucketed_parquet(spark, path, first, ["k"])
+    # the first merge into a missing path lays the target out bucketed
+    assert os.path.isfile(os.path.join(path, "_bucket_spec.json"))
     second = spark.createDataFrame([(1, 11.0), (2, 20.0)], "k int, price double")
-    sinks.merge_into_parquet(spark, path, second, ["k"])
-    got = {r["k"]: r["price"] for r in spark.read.parquet(path).collect()}
+    sinks.merge_into_bucketed_parquet(spark, path, second, ["k"])
+    got = {r["k"]: r["price"] for r in sinks.read_bucketed(spark, path).collect()}
     assert got == {1: 11.0, 2: 20.0}
 
 
@@ -153,11 +155,12 @@ def test_retry_failed_minimal_nulls_non_kept_columns(spark, tmp_path):
     full = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "k int, name string, price double"
     )
-    full.write.parquet(path)
+    sinks.write_merge_target(full, path, ["k"], n_buckets=4)
     failed = spark.createDataFrame([(2, "b2", 9.9), (3, "c", 3.0)],
                                    "k int, name string, price double")
     sinks.retry_failed_minimal(spark, path, failed, ["k"], ["name"])
-    got = {r["k"]: (r["name"], r["price"]) for r in spark.read.parquet(path).collect()}
+    got = {r["k"]: (r["name"], r["price"])
+           for r in sinks.read_bucketed(spark, path).collect()}
     assert got == {1: ("a", 1.0), 2: ("b2", None), 3: ("c", None)}
 
 

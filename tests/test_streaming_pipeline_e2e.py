@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from restaurant_etl_code_spark.plans.pipeline import catalog_pipeline
-from restaurant_etl_code_spark.sources.sinks import merge_into_parquet
+from restaurant_etl_code_spark.sources.sinks import (
+    merge_into_bucketed_parquet,
+    read_bucketed,
+)
 from restaurant_etl_code_spark.streaming import file_arrival_stream
 
 STAGED_SCHEMA = (
@@ -56,7 +59,9 @@ def test_streaming_incremental_pipeline(spark, tmp_path):
             "row_id", "product_name", "match_type",
             F.col("brand.name").alias("brand"), "description", "status",
         )
-        merge_into_parquet(batch_df.sparkSession, target, products, ["row_id"])
+        merge_into_bucketed_parquet(
+            batch_df.sparkSession, target, products, ["row_id"]
+        )
 
     def run():
         stream = file_arrival_stream(
@@ -80,7 +85,7 @@ def test_streaming_incremental_pipeline(spark, tmp_path):
     ).parquet(landing)
     run()
 
-    got = {r["row_id"]: r for r in spark.read.parquet(target).collect()}
+    got = {r["row_id"]: r for r in read_bucketed(spark, target).collect()}
     assert got[1]["match_type"] == "upc" and got[1]["description"] == "MD-crunchy"
     assert got[2]["match_type"] == "similarity" and got[2]["brand"] == "Brand-B"
     assert got[3]["match_type"] == "generated" and got[3]["brand"] == "Generic"
@@ -96,7 +101,7 @@ def test_streaming_incremental_pipeline(spark, tmp_path):
     ).parquet(landing)
     run()
 
-    got = {r["row_id"]: r for r in spark.read.parquet(target).collect()}
+    got = {r["row_id"]: r for r in read_bucketed(spark, target).collect()}
     assert len(got) == 4
     assert got[4]["match_type"] == "generated"
     assert got[3]["brand"] == "NowBranded"      # MERGE updated, not duplicated

@@ -3,7 +3,7 @@
 
 The driver canonicalizes both result frames with pandas — sort columns by
 name, ``sort_values`` over all columns, then value-hash — which is stricter
-than tools/oracle_check.py in two ways:
+than a rounded value comparison in two ways:
 
 1. list / struct / map cells make ``sort_values`` raise
    (``TypeError: unhashable type``) — every oracle-checked query must emit

@@ -394,8 +394,9 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
         "avoid": ["CartesianProduct"],
     },
     "mdb_scan_agg": {
-        # staged-CSV scan + two-phase agg; grouping key is a scan column
-        "want": ["HashAggregate", "Scan csv"],
+        # the extracted CSV lines parse into a local relation (no staging
+        # file) + two-phase agg; grouping key is a parsed column
+        "want": ["HashAggregate", "LocalTableScan"],
         "avoid": ["CartesianProduct", "BatchEvalPython", "Window"],
     },
     "simhash_pairs_banded": {
