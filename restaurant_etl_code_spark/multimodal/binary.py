@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from restaurant_etl_code_spark.operators._arrow import widen_for_codec
+
 __all__ = [
     "Decoder",
     "RealDecoder",
@@ -209,15 +211,6 @@ class PagedPdfDecoder:
         ]
 
 
-def _widen_for_codec(df: DataFrame, key_col: str) -> DataFrame:
-    """See operators._arrow.widen_for_codec — shared by every row-local
-    Arrow stage (codecs here, signatures in dedup, scorers in
-    similarity)."""
-    from restaurant_etl_code_spark.operators._arrow import widen_for_codec
-
-    return widen_for_codec(df, key_col)
-
-
 def pack_pages(
     df: DataFrame, *, id_col: str, pages_col: str, encode_fn,
     modality: str = "pdf", widen: bool = True
@@ -248,7 +241,7 @@ def pack_pages(
 
     staged = df.select(id_col, pages_col)
     if widen:
-        staged = _widen_for_codec(staged, id_col)
+        staged = widen_for_codec(staged, id_col)
     return staged.mapInPandas(mapper, schema=schema)
 
 
@@ -298,7 +291,7 @@ def explode_page_text(
 
     staged = assets.select(id_col, content_col)
     if widen:
-        staged = _widen_for_codec(staged, id_col)
+        staged = widen_for_codec(staged, id_col)
     return staged.mapInPandas(mapper, schema=schema)
 
 

@@ -1210,7 +1210,7 @@ def bpe_train(
     carry: tuple = (),
     emit_n_words: bool = False,
     return_state: bool = False,
-) -> DataFrame:
+) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Greedy merge TRAINER: ``n_merges`` rounds of find-the-most-frequent
     adjacent token pair → merge every left-to-right occurrence — the loop
     that ``bpe_pair_stats`` (the per-round statistic) and

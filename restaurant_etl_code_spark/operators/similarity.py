@@ -3,20 +3,31 @@
 The reference's similarity stage is a service call: top-1 match of staged
 product names against master-catalog embeddings with a minimum score
 (batch_processor.py:477-556, client api/api-client.py:211-266). Spark-first
-that becomes a vector top-k join, provided in two physical flavors behind
-one logical API:
+that becomes a family of vector top-k entries over one shared scoring core:
 
-- **exact**: broadcast the (small) query side, JVM-side cosine via array
-  lambdas, rank with a per-query window. O(|Q|·|C|) but embarrassingly
-  parallel and shuffle-free until the final top-k (which AQE keeps tiny).
-- **bucketed (LSH)**: pre-group both sides by a sign-LSH bucket of the
-  embedding and only score within buckets — the 100 TB path; recall traded
-  for a |C|/2^bits cut of the score space. (Spark ML's
-  BucketedRandomProjectionLSH offers the same shape; we keep the expression
-  version so the scoring function is explicit and oracle-checkable.)
+- **exact** (``cosine_topk``, ``l2_topk``, exact near-dup pairs): the
+  dimension-sized side ships to every task (closure matrix or broadcast)
+  and every pair is scored. O(|Q|·|C|) but embarrassingly parallel and
+  shuffle-free until the final top-k (which AQE keeps tiny).
+- **blocked** (``bucketed_cosine_topk``, ``ivf_topk``, LSH near-dup pairs):
+  both sides are keyed by a sign-LSH bucket or an inverted list and only
+  pairs sharing a key are scored — the 100 TB path; recall traded for a
+  cut of the score space. (Spark ML's BucketedRandomProjectionLSH offers
+  the same shape; we keep the expression version so the scoring function
+  is explicit and oracle-checkable.)
+- **quantized** (``pq_encode``, ``pq_adc_topk``, ``ivfpq_topk``): PQ codes
+  from deterministic Lloyd codebooks; candidates rank by ADC table lookups.
 
-Scores are rounded to 6dp *before* ranking with an id tie-break, so results
-are deterministic and engine-portable.
+Each step the entries share has one private helper: ``_collect_capped``
+(the driver guard on a dimension-sized side), ``_ranked`` (the per-query
+top-k window), ``_with_norm`` + ``_cosine_score`` / ``_d2_score`` (the
+guarded flat-or-fold pair score), ``_pq_sub`` + ``_adc_tables`` (PQ width
+check and lookup tables) and ``_kmeans_assign_arrow`` (the numpy
+nearest-center loop, IVF routing included). ``kmeans_centers`` is the
+module's one k-means.
+
+Scores are rounded (cosine 6dp, squared distances 9dp) *before* ranking
+with an id tie-break, so results are deterministic and engine-portable.
 """
 
 from __future__ import annotations
@@ -34,7 +45,6 @@ __all__ = [
     "bucketed_cosine_topk",
     "embedding_near_dup_pairs",
     "centroids_by_id",
-    "fit_centroids_kmeans",
     "kmeans_lloyd",
     "kmeans_centers",
     "pq_encode",
@@ -61,22 +71,103 @@ def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
     return int(row["__d"]) if row is not None and row["__d"] is not None else None
 
 
+def _auto_nbits(df: DataFrame, target_bucket: int) -> int:
+    """Sign-LSH bit count sized to the corpus (one scalar count):
+    clamp(4..24, ⌈log₂(n / target_bucket)⌉)."""
+    n = df.count()
+    return max(4, min(24, math.ceil(math.log2(max(n, 2) / target_bucket))))
+
+
+def _collect_capped(df: DataFrame, max_rows: int, what: str, hint: str) -> list:
+    """Collect a side that MUST be dimension-sized (it ships to the driver
+    or to every task). A ``limit(max_rows+1)`` probe fails fast — one
+    cheap job, no full count — when a caller passes a corpus-sized side."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(f"{what}; it has > {max_rows} rows. {hint}")
+    return rows
+
+
+def _unit_rows(M):
+    """Rows of a float64 matrix scaled to unit L2 norm; zero-norm rows
+    become NaN, so they score null against everything."""
+    import numpy as np
+
+    n = np.linalg.norm(M, axis=1)
+    n[n == 0] = np.nan
+    return (M.T / n).T
+
+
 def _ranked(
     scored: DataFrame,
     k: int,
-    min_score: float | None,
+    min_score: float | None = None,
     max_score_exclusive: float | None = None,
+    *,
+    by: str = "score",
+    desc: bool = True,
+    exclude_self: bool = False,
 ) -> DataFrame:
+    """Per-query top-k window over ``scored`` (query_id, neighbor_id, ...,
+    ``by``): rank by ``by`` (descending for similarities, ascending for
+    distances) with a neighbor-id tie-break, keep rank ≤ k and append
+    ``rank`` to the scored columns."""
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
     if min_score is not None:
-        scored = scored.filter(F.col("score") >= min_score)
+        scored = scored.filter(F.col(by) >= min_score)
     if max_score_exclusive is not None:
-        scored = scored.filter(F.col("score") < max_score_exclusive)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+        scored = scored.filter(F.col(by) < max_score_exclusive)
+    order = F.col(by).desc() if desc else F.col(by).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        .select(*scored.columns, "rank")
     )
+
+
+def _with_norm(df: DataFrame, vec: str, norm: str, dim: int | None) -> DataFrame:
+    """Add the per-row L2 norm ``norm`` of ``vec`` that ``_cosine_score``
+    reads on the flat path (nothing when ``dim`` is unknown)."""
+    return df.withColumn(norm, V.l2_norm_fast(vec, dim)) if dim else df
+
+
+def _cosine_score(a: str, b: str, na: str, nb: str, dim: int | None):
+    """6dp cosine of array columns ``a``/``b`` as ``score``: the guarded
+    flat chain over precomputed norms when ``dim`` is known (per-side
+    norms make the join projection compile instead of running the
+    interpreted zip_with fold per pair), the fold otherwise — bit-identical
+    either way (see vectors.cosine_fast_paired)."""
+    s = (
+        V.cosine_fast_paired(a, b, na, nb, dim)
+        if dim
+        else V.cosine(F.col(a), F.col(b))
+    )
+    return F.round(s, 6).alias("score")
+
+
+def _d2_score(a: str, b: str, dim: int | None):
+    """Unrounded squared L2 of array columns ``a``/``b``: the guarded flat
+    codegen chain when ``dim`` is known (same accumulation order as the
+    fold, so bit-identical; see vectors.d2_chain_sql), else the fold,
+    which is CodegenFallback and runs interpreted per pair."""
+    fold = F.aggregate(
+        F.zip_with(
+            F.col(a),
+            F.col(b),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    if not dim:
+        return fold
+    return F.when(
+        (F.size(a) == dim) & (F.size(b) == dim),
+        F.expr(V.d2_chain_sql(f"`{a}`", f"`{b}`", dim)),
+    ).otherwise(fold)
 
 
 def cosine_topk(
@@ -124,14 +215,11 @@ def cosine_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
-    probe = queries.select(query_id, query_vec).limit(max_query_rows + 1)
-    q_rows = probe.collect()
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"cosine_topk collects the query side to the driver; it has "
-            f"> {max_query_rows} rows. Use bucketed_cosine_topk or ivf_topk "
-            f"for corpus-sized query sides."
-        )
+    q_rows = _collect_capped(
+        queries.select(query_id, query_vec), max_query_rows,
+        "cosine_topk collects the query side to the driver",
+        "Use bucketed_cosine_topk or ivf_topk for corpus-sized query sides.",
+    )
     id_field = corpus.schema[corpus_id]
     schema = T.StructType(
         [
@@ -146,20 +234,13 @@ def cosine_topk(
             k, min_score, max_score_exclusive,
         )
     qids = [r[0] for r in q_rows]
-    Q = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0] = np.nan  # zero-norm queries score null everywhere
-    Qhat = (Q.T / qn).T
+    Qhat = _unit_rows(np.asarray([r[1] for r in q_rows], dtype=np.float64))
 
     def mapper(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            cids = pdf[corpus_id].to_numpy()
-            C = np.asarray(pdf[corpus_vec].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(C, axis=1)
-            cn[cn == 0] = np.nan
-            S = np.round((C.T / cn).T @ Qhat.T, 6)  # |batch| × |Q|
+            cids, S = _batch_scores(pdf, corpus_id, corpus_vec, Qhat)
             out_q, out_n, out_s = [], [], []
             for j, qid in enumerate(qids):
                 s = S[:, j]
@@ -188,6 +269,15 @@ def cosine_topk(
         mapper, schema=schema
     )
     return _ranked(scored, k, min_score, max_score_exclusive)
+
+
+def _batch_scores(pdf, id_col: str, vec_col: str, Qhat):
+    """(ids, 6dp cosine matrix |batch| × |Q|) of one Arrow batch against
+    the unit rows ``Qhat`` — one BLAS matmul per batch."""
+    import numpy as np
+
+    C = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+    return pdf[id_col].to_numpy(), np.round(_unit_rows(C) @ Qhat.T, 6)
 
 
 def hard_negatives(
@@ -257,8 +347,7 @@ def bucketed_cosine_topk(
     the corpus side (the big one) is untouched. Tested to dominate
     single-probe recall in tests/test_dedup_similarity.py."""
     if nbits == "auto":
-        n = corpus.count()
-        nbits = max(4, min(24, math.ceil(math.log2(max(n, 2) / target_bucket))))
+        nbits = _auto_nbits(corpus, target_bucket)
     dim = _probe_dim(corpus, corpus_vec)
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -270,12 +359,8 @@ def bucketed_cosine_topk(
         F.col(corpus_vec).alias("__cv"),
         V.sign_lsh_bucket(F.col(corpus_vec), nbits).alias("__bkt"),
     )
-    if dim:
-        # per-side norms + guarded flat dot: the scoring projection
-        # compiles instead of running the interpreted zip_with fold per
-        # pair — bit-identical scores (see vectors.cosine_fast_paired)
-        q = q.withColumn("__qn", V.l2_norm_fast("__qv", dim))
-        c = c.withColumn("__cn", V.l2_norm_fast("__cv", dim))
+    q = _with_norm(q, "__qv", "__qn", dim)
+    c = _with_norm(c, "__cv", "__cn", dim)
     if probes > 1:
         flips = F.array(
             F.col("__bkt"),
@@ -285,20 +370,11 @@ def bucketed_cosine_topk(
             ],
         )
         q = q.withColumn("__bkt", F.explode(flips))
-    scored = q.join(c, on="__bkt")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    score = (
-        V.cosine_fast_paired("__qv", "__cv", "__qn", "__cn", dim)
-        if dim
-        else V.cosine(F.col("__qv"), F.col("__cv"))
+    scored = q.join(c, on="__bkt").select(
+        "query_id", "neighbor_id",
+        _cosine_score("__qv", "__cv", "__qn", "__cn", dim),
     )
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.round(score, 6).alias("score"),
-    )
-    return _ranked(scored, k, min_score)
+    return _ranked(scored, k, min_score, exclude_self=exclude_self)
 
 
 def embedding_near_dup_pairs(
@@ -325,8 +401,7 @@ def embedding_near_dup_pairs(
     buckets); hold it with multi-probe or a second hash family, or keep
     target_bucket generous and pay linear-in-n extra cosines."""
     if nbits == "auto":
-        n = df.count()
-        nbits = max(4, min(24, math.ceil(math.log2(max(n, 2) / target_bucket))))
+        nbits = _auto_nbits(df, target_bucket)
     if nbits <= 0:
         return _all_pairs_near_dup_blas(
             df, id_col, vec_col, threshold, max_rows=exact_max_rows
@@ -336,21 +411,12 @@ def embedding_near_dup_pairs(
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     a = a.withColumn("__bkt", V.sign_lsh_bucket(F.col("__va"), nbits))
     b = b.withColumn("__bkt", V.sign_lsh_bucket(F.col("__vb"), nbits))
-    if dim:
-        a = a.withColumn("__na", V.l2_norm_fast("__va", dim))
-        b = b.withColumn("__nb", V.l2_norm_fast("__vb", dim))
-    pairs = a.join(b, on="__bkt").filter(F.col("id_a") < F.col("id_b"))
-    score = (
-        V.cosine_fast_paired("__va", "__vb", "__na", "__nb", dim)
-        if dim
-        else V.cosine(F.col("__va"), F.col("__vb"))
-    )
+    a = _with_norm(a, "__va", "__na", dim)
+    b = _with_norm(b, "__vb", "__nb", dim)
     return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            F.round(score, 6).alias("score"),
-        )
+        a.join(b, on="__bkt")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", _cosine_score("__va", "__vb", "__na", "__nb", dim))
         .filter(F.col("score") >= threshold)
     )
 
@@ -373,32 +439,24 @@ def _all_pairs_near_dup_blas(
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = df.select(id_col, vec_col).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"exact all-pairs near-dup is quadratic and ships the corpus to "
-            f"every task; it has > {max_rows} rows. Use nbits>0 (sign-LSH "
-            f"blocking) or nbits='auto' at scale — and for recall AUDITS "
-            f"(dedup_recall), sample the corpus first: recall estimated on "
-            f"a few hundred k sampled vectors is the standard practice."
-        )
-    ids = [r[0] for r in rows]
-    M = np.asarray([r[1] for r in rows], dtype=np.float64)
-    mn = np.linalg.norm(M, axis=1)
-    mn[mn == 0] = np.nan
-    Mhat = (M.T / mn).T
-    ids_arr = np.asarray(ids)
+    rows = _collect_capped(
+        df.select(id_col, vec_col), max_rows,
+        "exact all-pairs near-dup is quadratic and ships the corpus to "
+        "every task",
+        "Use nbits>0 (sign-LSH blocking) or nbits='auto' at scale — and for "
+        "recall AUDITS (dedup_recall), sample the corpus first: recall "
+        "estimated on a few hundred k sampled vectors is the standard "
+        "practice.",
+    )
+    ids_arr = np.asarray([r[0] for r in rows])
+    Mhat = _unit_rows(np.asarray([r[1] for r in rows], dtype=np.float64))
     id_field = df.schema[id_col]
 
     def mapper(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            cids = pdf[id_col].to_numpy()
-            C = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            cn = np.linalg.norm(C, axis=1)
-            cn[cn == 0] = np.nan
-            S = np.round((C.T / cn).T @ Mhat.T, 6)  # |batch| × |corpus|
+            cids, S = _batch_scores(pdf, id_col, vec_col, Mhat)
             with np.errstate(invalid="ignore"):
                 keep = (cids[:, None] < ids_arr[None, :]) & (S >= threshold)
             bi, ci = np.nonzero(keep)
@@ -446,21 +504,6 @@ def centroids_by_id(corpus: DataFrame, *, n: int, id_col: str = "vec_id",
     )
 
 
-def fit_centroids_kmeans(corpus: DataFrame, *, n: int, vec_col: str = "embedding",
-                         seed: int = 42, max_iter: int = 10) -> DataFrame:
-    """Production coarse quantizer: seeded k-means (Spark ML) over the
-    corpus. Returns the same (centroid_id, centroid) shape as
-    ``centroids_by_id`` so the two are interchangeable."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n, seed=seed, maxIter=max_iter).fit(feats)
-    spark = corpus.sparkSession
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return spark.createDataFrame(rows, "centroid_id int, centroid array<double>")
-
-
 def _assign_lists(df: DataFrame, centroids: DataFrame, *, id_alias: str,
                   vec_alias: str, nprobe: int, dim: int | None = None) -> DataFrame:
     """Nearest-``nprobe`` centroid ids per vector. Centroids are tiny and
@@ -468,18 +511,7 @@ def _assign_lists(df: DataFrame, centroids: DataFrame, *, id_alias: str,
     Distance is squared L2 (monotone with L2 — no sqrt needed). With
     ``dim`` the distance is the guarded flat codegen chain (bit-identical
     to the fold; see vectors.d2_chain_sql)."""
-    fold = F.aggregate(
-        F.zip_with(F.col(vec_alias), F.col("centroid"),
-                   lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    if dim:
-        d = F.when(
-            (F.size(vec_alias) == dim) & (F.size("centroid") == dim),
-            F.expr(V.d2_chain_sql(f"`{vec_alias}`", "`centroid`", dim)),
-        ).otherwise(fold)
-    else:
-        d = fold
+    d = _d2_score(vec_alias, "centroid", dim)
     w = Window.partitionBy(id_alias).orderBy(F.round(d, 9).asc(), F.col("centroid_id"))
     return (
         df.join(F.broadcast(centroids), F.lit(True))
@@ -527,23 +559,13 @@ def ivf_topk(
         centroids, id_alias="query_id", vec_alias="__qv", nprobe=nprobe,
         dim=dim,
     )
-    if dim:
-        c = c.withColumn("__cn", V.l2_norm_fast("__cv", dim))
-        q = q.withColumn("__qn", V.l2_norm_fast("__qv", dim))
-    scored = q.join(c, on="list_id")
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    score = (
-        V.cosine_fast_paired("__qv", "__cv", "__qn", "__cn", dim)
-        if dim
-        else V.cosine(F.col("__qv"), F.col("__cv"))
+    c = _with_norm(c, "__cv", "__cn", dim)
+    q = _with_norm(q, "__qv", "__qn", dim)
+    scored = q.join(c, on="list_id").select(
+        "query_id", "neighbor_id",
+        _cosine_score("__qv", "__cv", "__qn", "__cn", dim),
     )
-    scored = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.round(score, 6).alias("score"),
-    )
-    return _ranked(scored, k, min_score)
+    return _ranked(scored, k, min_score, exclude_self=exclude_self)
 
 
 def topk_recall(approx: DataFrame, exact: DataFrame) -> DataFrame:
@@ -606,13 +628,13 @@ def assign_centroids(
     from pyspark.sql import types as T
 
     rows = sorted(
-        centroids.limit(max_centroids + 1).collect(), key=lambda r: r["centroid_id"]
+        _collect_capped(
+            centroids, max_centroids,
+            "assign_centroids collects the centroid table to the driver",
+            "Coarsen the quantizer.",
+        ),
+        key=lambda r: r["centroid_id"],
     )
-    if len(rows) > max_centroids:
-        raise ValueError(
-            f"assign_centroids collects the centroid table to the driver; "
-            f"it has > {max_centroids} rows. Coarsen the quantizer."
-        )
     C = np.asarray([r["centroid"] for r in rows], dtype=np.float64)
     cid = np.asarray([r["centroid_id"] for r in rows], dtype=np.int32)
     id_field = corpus.schema[id_col]
@@ -699,10 +721,7 @@ def semantic_dedup(
             return pd.DataFrame({id_col: pdf[id_col][:0]})
         pdf = pdf.sort_values(id_col, kind="mergesort")
         ids = pdf[id_col].to_numpy()
-        M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-        nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0] = np.nan
-        Mhat = (M.T / nrm).T
+        Mhat = _unit_rows(np.asarray(list(pdf[vec_col]), dtype=np.float64))
         dead = np.zeros(len(ids), dtype=bool)
         for s0 in range(0, len(ids), 1024):
             blk = slice(s0, min(s0 + 1024, len(ids)))
@@ -737,10 +756,11 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     checkpoint: bool = False,
 ) -> DataFrame:
-    """Deterministic Lloyd's k-means over an embedding column — the
-    oracle-checkable clustering twin of ``fit_centroids_kmeans`` (Spark
-    ML, seeded but not engine-portable). Seeding is ``centroids_by_id``
-    (first ``n`` vectors by id — reproducible anywhere); each of the
+    """Deterministic Lloyd's k-means over an embedding column; the loop is
+    ``kmeans_centers``, the module's one k-means (oracle-checkable, where
+    a seeded Spark ML fit is not engine-portable). Seeding is
+    ``centroids_by_id`` (first ``n`` vectors by id — reproducible
+    anywhere); each of the
     fixed ``iterations`` rounds assigns every vector to its nearest
     centroid (squared L2 rounded to 9dp, ties to the smallest
     centroid_id) and recomputes centroids as the element-wise mean
@@ -878,7 +898,7 @@ def _vectors_matrix(pdf, vec_field: str, dim: int, id_field: str | None = None):
 
 
 def _kmeans_assign_arrow(
-    vecs: DataFrame, vec_field: str, centers: dict
+    vecs: DataFrame, vec_field: str, centers: dict, residual: bool = False
 ) -> DataFrame:
     """numpy argmin assignment for LARGE center sets: centers ride the
     closure as one (L, dim) matrix, each Arrow batch scores via the BLAS
@@ -886,7 +906,12 @@ def _kmeans_assign_arrow(
     break to the smallest centroid_id exactly like ``_kmeans_best`` (ids
     sorted ascending → argmin's first-occurrence rule). Pre-rounding float
     order differs from the codegen fold in the last ulp — oracle-pinned
-    configurations stay on the literal path below the threshold."""
+    configurations stay on the literal path below the threshold.
+
+    ``residual=True`` (IVF-PQ residual routing; ``vec_field`` must be
+    ``array<double>``) replaces each vector by ``vec − center`` in the
+    same numpy pass — the subtraction must not round-trip through a
+    literal centers array (same blow-up as the assignment itself)."""
     from pyspark.sql import types as T
 
     lids = sorted(centers)
@@ -907,6 +932,9 @@ def _kmeans_assign_arrow(
         C = np.asarray(cmat, dtype=np.float64)  # (L, dim)
         cn = (C * C).sum(axis=1)  # |c|²
         ids = np.asarray(lids, dtype=np.int64)
+        # chunk rows so the (chunk, L) score matrix stays ~64 MB even at
+        # L = 65536
+        chunk = max(1, (8 << 20) // max(len(lids), 1))
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -916,9 +944,6 @@ def _kmeans_assign_arrow(
             )
             out_pos = np.empty(len(V), dtype=np.int64)
             out_d2 = np.empty(len(V), dtype=np.float64)
-            # chunk rows so the (chunk, L) score matrix stays ~64 MB even
-            # at L = 65536
-            chunk = max(1, (8 << 20) // max(len(lids), 1))
             for s in range(0, len(V), chunk):
                 W = V[s : s + chunk]
                 d2 = ((W * W).sum(axis=1)[:, None] - 2.0 * (W @ C.T)) + cn[None, :]
@@ -927,66 +952,13 @@ def _kmeans_assign_arrow(
                 out_pos[s : s + len(W)] = pos
                 out_d2[s : s + len(W)] = d2[np.arange(len(W)), pos]
             res = pd.DataFrame(pdf)
+            if residual:
+                res[vec_field] = pd.Series((V - C[out_pos]).tolist(), dtype=object)
             res["centroid_id"] = ids[out_pos]
             res["__d2"] = np.maximum(out_d2, 0.0)  # expansion can dip −ε
             yield res
 
     return vecs.mapInPandas(mapper, schema=out_schema)
-
-
-def _route_lists_arrow(
-    corpus: DataFrame,
-    centers: dict,
-    *,
-    id_col: str,
-    vec_col: str,
-    residual: bool,
-) -> DataFrame:
-    """IVF routing for LARGE list counts: (id, list_id, __vv) where __vv
-    is the raw vector (``residual=False``) or ``vec − center[list]``
-    (``residual=True``), both computed in the same numpy pass as the
-    argmin — the residual subtraction must not round-trip through a
-    literal centers array (same blow-up as the assignment itself)."""
-    from pyspark.sql import types as T
-
-    lids = sorted(centers)
-    cmat = [centers[cid] for cid in lids]
-    id_field = corpus.select(id_col).schema.fields[0]
-    out_schema = T.StructType(
-        [
-            id_field,
-            T.StructField("list_id", T.LongType(), False),
-            T.StructField("__vv", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-
-    def mapper(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cmat, dtype=np.float64)
-        cn = (C * C).sum(axis=1)
-        ids = np.asarray(lids, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _vectors_matrix(pdf, vec_col, C.shape[1], id_col)
-            out_pos = np.empty(len(V), dtype=np.int64)
-            chunk = max(1, (8 << 20) // max(len(lids), 1))
-            for s in range(0, len(V), chunk):
-                W = V[s : s + chunk]
-                d2 = ((W * W).sum(axis=1)[:, None] - 2.0 * (W @ C.T)) + cn[None, :]
-                out_pos[s : s + len(W)] = d2.round(9).argmin(axis=1)
-            vv = (V - C[out_pos]) if residual else V
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "list_id": ids[out_pos],
-                    "__vv": pd.Series(vv.tolist(), dtype=object),
-                }
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(mapper, schema=out_schema)
 
 
 def _kmeans_assign(vecs: DataFrame, vec_field: str, centers: dict) -> DataFrame:
@@ -1030,20 +1002,20 @@ def kmeans_centers(
             .agg(F.round(F.avg(F.col("__x").cast("double")), 6).alias("__m"))
             .collect()
         )  # n*dim counter rows — the volume Spark ML collects per round
-        new_centers = {}
+        means: dict = {}
         for r in upd_rows:
-            new_centers.setdefault(int(r["centroid_id"]), {})[int(r["__p"])] = r[
-                "__m"
-            ]
-        centers = {
-            cid: (
-                [new_centers[cid][p] for p in sorted(new_centers[cid])]
-                if cid in new_centers
-                else old  # emptied centroid keeps its position
-            )
-            for cid, old in centers.items()
-        }
+            means.setdefault(int(r["centroid_id"]), {})[int(r["__p"])] = r["__m"]
+        centers = _lloyd_update(centers, means)
     return centers
+
+
+def _lloyd_update(centers: dict, means: dict) -> dict:
+    """Next Lloyd centers from ``{centroid_id: {dim: mean}}``; an emptied
+    centroid keeps its position."""
+    return {
+        cid: [means[cid][p] for p in sorted(means[cid])] if cid in means else old
+        for cid, old in centers.items()
+    }
 
 
 def _pq_train_books(
@@ -1100,18 +1072,14 @@ def _pq_train_books(
         for j in range(m)
     ]
     for _ in range(iterations):
-        structs = []
-        for j, book in enumerate(books):
-            sv = F.slice(F.col(vec_col), j * sub + 1, sub)
-            sv_sql = f"slice(`{vec_col}`, {j * sub + 1}, {sub})"
-            best = _kmeans_best(sv_sql, book)
-            structs.append(
-                F.struct(
-                    F.lit(j).alias("__j"),
-                    best["centroid_id"].alias("__cid"),
-                    sv.alias("__sv"),
-                )
+        structs = [
+            F.struct(
+                F.lit(j).alias("__j"),
+                best["centroid_id"].alias("__cid"),
+                F.slice(F.col(vec_col), j * sub + 1, sub).alias("__sv"),
             )
+            for j, best in enumerate(_sub_best(vec_col, books, sub))
+        ]
         upd = (
             enc_src.select(F.explode(F.array(*structs)).alias("__e"))
             .select(
@@ -1123,23 +1091,74 @@ def _pq_train_books(
             .agg(F.round(F.avg(F.col("__x").cast("double")), 6).alias("__m"))
             .collect()
         )  # m·k·sub counter rows — the same volume m separate loops ship
-        new: dict = {}
+        means: dict = {}
         for r in upd:
-            new.setdefault(int(r["__j"]), {}).setdefault(
+            means.setdefault(int(r["__j"]), {}).setdefault(
                 int(r["__cid"]), {}
             )[int(r["__p"])] = r["__m"]
-        books = [
-            {
-                cid: (
-                    [new[j][cid][p] for p in sorted(new[j][cid])]
-                    if j in new and cid in new[j]
-                    else old  # emptied centroid keeps its position
-                )
-                for cid, old in book.items()
-            }
-            for j, book in enumerate(books)
-        ]
+        books = [_lloyd_update(book, means.get(j, {})) for j, book in enumerate(books)]
     return books
+
+
+def _pq_sub(corpus: DataFrame, vec_col: str, m: int) -> int:
+    """Subspace width ``dim // m`` from the first non-null vector; fails on
+    an empty corpus or a width that ``m`` does not divide."""
+    head = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
+    if head is None:
+        raise ValueError("empty corpus (no non-null vectors)")
+    dim = len(head[0])
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
+    return dim // m
+
+
+def _sub_best(vec_col: str, books: list, sub: int) -> list:
+    """Per-subspace literal argmin structs (``_kmeans_best``) of
+    ``vec_col`` against each codebook."""
+    return [
+        _kmeans_best(f"slice(`{vec_col}`, {j * sub + 1}, {sub})", book)
+        for j, book in enumerate(books)
+    ]
+
+
+def _pq_codes(vec_col: str, books: list, sub: int) -> list:
+    """The PQ code columns ``__code_0..__code_{m-1}`` of ``vec_col``."""
+    return [
+        best["centroid_id"].alias(f"__code_{j}")
+        for j, best in enumerate(_sub_best(vec_col, books, sub))
+    ]
+
+
+def _sq_dist(a, b) -> float:
+    """9dp squared L2 of two float sequences, summed left to right — the
+    driver-side twin of ``_d2_sql``."""
+    return round(sum((x - y) * (x - y) for x, y in zip(a, b)), 9)
+
+
+def _adc_tables(vec, books: list, sub: int) -> list:
+    """One query vector's ADC lookup tables: entry ``c`` of table ``j`` is
+    the squared distance of the vector's ``j``-th slice to center ``c``
+    of codebook ``j``."""
+    return [
+        [_sq_dist(vec[j * sub : (j + 1) * sub], book[c]) for c in sorted(book)]
+        for j, book in enumerate(books)
+    ]
+
+
+def _adc_ranked(pairs: DataFrame, m: int, k: int, exclude_self: bool,
+                keep: tuple = ()) -> DataFrame:
+    """ADC top-k over (corpus codes × query tables) pairs: a pair's
+    approximate squared distance is the 9dp sum of its ``m`` table
+    lookups ``__lut_j[__code_j]``, ranked ascending."""
+    total = F.lit(0.0)
+    for j in range(m):
+        total = total + F.element_at(
+            F.col(f"__lut_{j}"), F.col(f"__code_{j}") + 1
+        )
+    scored = pairs.select(
+        "query_id", "neighbor_id", *keep, F.round(total, 9).alias("adc")
+    )
+    return _ranked(scored, k, by="adc", desc=False, exclude_self=exclude_self)
 
 
 def _query_lut_frame(
@@ -1200,20 +1219,13 @@ def pq_encode(
     Returns (id_col, code_0..code_{m-1}, err_0..err_{m-1}) with codes in
     [0, k) and 9dp-rounded per-subspace squared errors.
     """
-    head = corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if head is None:
-        raise ValueError("empty corpus (no non-null vectors)")
-    dim = len(head[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
+    sub = _pq_sub(corpus, vec_col, m)
     books = _pq_train_books(
         corpus, id_col, m=m, sub=sub, k_centers=k, iterations=iterations,
         vec_col=vec_col,
     )
     cols = [F.col(id_col)]
-    for j, book in enumerate(books):
-        best = _kmeans_best(f"slice(`{vec_col}`, {j * sub + 1}, {sub})", book)
+    for j, best in enumerate(_sub_best(vec_col, books, sub)):
         cols.append(best["centroid_id"].alias(f"code_{j}"))
         cols.append(best["__d2"].alias(f"err_{j}"))
     return corpus.select(*cols)
@@ -1254,71 +1266,31 @@ def pq_adc_topk(
     Returns (query_id, neighbor_id, adc, rank) — rank ≤ k by ascending
     approximate squared distance.
     """
-    head = corpus.select(corpus_vec).filter(F.col(corpus_vec).isNotNull()).first()
-    if head is None:
-        raise ValueError("empty corpus (no non-null vectors)")
-    dim = len(head[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
+    sub = _pq_sub(corpus, corpus_vec, m)
     books = _pq_train_books(
         corpus, corpus_id, m=m, sub=sub, k_centers=k_centers,
         iterations=iterations, vec_col=corpus_vec,
     )
-    probe = queries.select(query_id, query_vec).limit(max_query_rows + 1)
-    q_rows = probe.collect()
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"pq_adc_topk collects the query side; it has > {max_query_rows} "
-            f"rows — shard the query side or use ivf_topk for corpus-sized "
-            f"query sides"
-        )
-    # per-query ADC tables: round exactly like the SQL twin (9dp), shipped
-    # as a BROADCAST relation of (query_id, lut_0..lut_{m-1}) rows rather
-    # than per-query literal expressions — the scoring expression is m
-    # element_at lookups regardless of |Q|, where the literal formulation
-    # compiled |Q|·m·k_centers constants into the plan (codegen time grew
-    # with the query batch; found while profiling ivfpq_recall)
-    tables = []
-    for qid, qvec in q_rows:
-        luts = []
-        for j, book in enumerate(books):
-            qs = [float(x) for x in qvec[j * sub : (j + 1) * sub]]
-            t = {
-                cid: round(sum((a - b) * (a - b) for a, b in zip(qs, c)), 9)
-                for cid, c in book.items()
-            }
-            luts.append([t[c] for c in sorted(t)])
-        tables.append((qid, *luts))
-
-    code_cols = [
-        _kmeans_best(f"slice(`{corpus_vec}`, {j * sub + 1}, {sub})", book)[
-            "centroid_id"
-        ].alias(f"__code_{j}")
-        for j, book in enumerate(books)
+    q_rows = _collect_capped(
+        queries.select(query_id, query_vec), max_query_rows,
+        "pq_adc_topk collects the query side to the driver",
+        "Shard the query side or use ivf_topk for corpus-sized query sides.",
+    )
+    # per-query ADC tables shipped as a BROADCAST relation of (query_id,
+    # lut_0..lut_{m-1}) rows rather than per-query literal expressions —
+    # the scoring expression is m element_at lookups regardless of |Q|,
+    # where the literal formulation compiled |Q|·m·k_centers constants into
+    # the plan (codegen time grew with the query batch; found while
+    # profiling ivfpq_recall)
+    tables = [
+        (qid, *_adc_tables([float(x) for x in qvec], books, sub))
+        for qid, qvec in q_rows
     ]
-    coded = corpus.select(F.col(corpus_id).alias("neighbor_id"), *code_cols)
-    qplan = _query_lut_frame(
-        queries, query_id, tables, m, with_list_id=False
+    coded = corpus.select(
+        F.col(corpus_id).alias("neighbor_id"), *_pq_codes(corpus_vec, books, sub)
     )
-
-    total = F.lit(0.0)
-    for j in range(m):
-        total = total + F.element_at(
-            F.col(f"__lut_{j}"), F.col(f"__code_{j}") + 1
-        )
-    scored = (
-        coded.crossJoin(F.broadcast(qplan))
-        .select("query_id", "neighbor_id", F.round(total, 9).alias("adc"))
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "rank")
-    )
+    qplan = _query_lut_frame(queries, query_id, tables, m, with_list_id=False)
+    return _adc_ranked(coded.crossJoin(F.broadcast(qplan)), m, k, exclude_self)
 
 
 def ivfpq_topk(
@@ -1371,22 +1343,13 @@ def ivfpq_topk(
 
     Returns (query_id, neighbor_id, list_id, adc, rank).
     """
-    head = corpus.select(corpus_vec).filter(F.col(corpus_vec).isNotNull()).first()
-    if head is None:
-        raise ValueError("empty corpus (no non-null vectors)")
-    dim = len(head[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
+    sub = _pq_sub(corpus, corpus_vec, m)
     if n_lists == "auto":
         # the fixed-list-count trap is the nbits/n_buckets trap again:
         # probed candidate work is n·nprobe/n_lists, so a constant
         # n_lists loses its cut as the corpus grows. The standard
         # heuristic n_lists ≈ √n keeps probed work ∝ √n per query.
-        import math as _math
-
-        n = corpus.count()
-        n_lists = max(8, min(1 << 16, int(_math.isqrt(max(n, 1)))))
+        n_lists = max(8, min(1 << 16, math.isqrt(max(corpus.count(), 1))))
     coarse = kmeans_centers(
         corpus, n=n_lists, iterations=coarse_iterations,
         id_col=corpus_id, vec_col=corpus_vec,
@@ -1395,90 +1358,63 @@ def ivfpq_topk(
     # runs in the numpy/Arrow assigner — the literal centers_arr +
     # _kmeans_best formulation compiles ~n_lists·dim literals per row and
     # stops being a compilable plan at the √n scale 'auto' targets
-    # (found in review). Both modes produce (id, list_id, __vv).
-    use_arrow_routing = len(coarse) > _LITERAL_ASSIGN_MAX_CENTERS
-    routed = None
-    if use_arrow_routing:
+    # (found in review). Both branches stage (id, list_id, vector).
+    if len(coarse) > _LITERAL_ASSIGN_MAX_CENTERS:
         # persisted: the full-corpus numpy routing pass feeds codebook
         # seeding, every Lloyd round, AND the final encode — without the
         # persist it would re-execute per consumer, and a
         # non-deterministic source could route training and encoding
         # differently (round-7 advisory). Same persist-and-let-LRU-evict
         # pattern as lsh_candidate_pairs' banded stage.
-        routed = _route_lists_arrow(
-            corpus, coarse, id_col=corpus_id, vec_col=corpus_vec,
-            residual=residual,
+        routed = _kmeans_assign_arrow(
+            corpus.select(
+                corpus_id, F.col(corpus_vec).cast("array<double>").alias("__vv")
+            ),
+            "__vv", coarse, residual=residual,
         ).persist()
-    lids = sorted(coarse)
-    centers_arr = None
-    lid_index = {cid: i for i, cid in enumerate(lids)}
-    if not use_arrow_routing:
-        # SQL-string build (one py4j call) — n_lists·dim F.lit calls cost
-        # ~1 s of driver time at 8×64; see _d2_sql
-        centers_arr = F.expr(
-            "array(" + ",".join(
-                "array(" + ",".join(
-                    _lit_d(x) for x in coarse[cid]
-                ) + ")"
-                for cid in lids
-            ) + ")"
-        )
-
-    def _list_pos(lid_col):
-        """centroid_id → position in centers_arr (ids are dense from
-        centroids_by_id; the when-chain covers any gaps)."""
-        pos = lid_col
-        for cid, i in lid_index.items():
-            if cid != i:
-                pos = F.when(lid_col == cid, F.lit(i)).otherwise(pos)
-        return pos.cast("int")
-
-    if use_arrow_routing:
-        enc_src = routed.select(
-            F.col(corpus_id), F.col("__vv").alias("__rv")
-        )
-    elif residual:
-        lid_c = _kmeans_best(f"`{corpus_vec}`", coarse)["centroid_id"]
-        ctr = F.element_at(centers_arr, _list_pos(lid_c) + 1)
-        enc_src = corpus.select(
-            F.col(corpus_id),
-            F.zip_with(
-                F.col(corpus_vec), ctr, lambda x, y: x.cast("double") - y
-            ).alias("__rv"),
+        enc_src = routed.select(F.col(corpus_id), F.col("__vv").alias("__rv"))
+        staged = routed.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            F.col("centroid_id").alias("list_id"),
+            "__vv",
         )
     else:
-        enc_src = corpus.select(
-            F.col(corpus_id),
-            F.col(corpus_vec).cast("array<double>").alias("__rv"),
+        # SQL-string build (one py4j call) — n_lists·dim F.lit calls cost
+        # ~1 s of driver time at 8×64; see _d2_sql. Centroid ids are the
+        # dense 0..n-1 of the centroids_by_id seeds, so id + 1 indexes it.
+        centers_arr = F.expr(
+            "array(" + ",".join(
+                "array(" + ",".join(_lit_d(x) for x in coarse[cid]) + ")"
+                for cid in sorted(coarse)
+            ) + ")"
         )
+        list_col = _kmeans_best(f"`{corpus_vec}`", coarse)["centroid_id"]
+        rv = F.col(corpus_vec).cast("array<double>")
+        if residual:
+            rv = F.zip_with(
+                F.col(corpus_vec), F.element_at(centers_arr, list_col + 1),
+                lambda x, y: x.cast("double") - y,
+            )
+        enc_src = corpus.select(F.col(corpus_id), rv.alias("__rv"))
+        staged = corpus.select(
+            F.col(corpus_id).alias("neighbor_id"),
+            list_col.alias("list_id"),
+            F.col(corpus_vec).cast("array<double>").alias("__vv"),
+        )
+        if residual:
+            ctr = F.element_at(centers_arr, F.col("list_id") + 1)
+            staged = staged.withColumn(
+                "__vv", F.zip_with(F.col("__vv"), ctr, lambda x, y: x - y)
+            )
     books = _pq_train_books(
         enc_src, corpus_id, m=m, sub=sub, k_centers=k_centers,
         iterations=pq_iterations, vec_col="__rv",
     )
-    probe = queries.select(query_id, query_vec).limit(max_query_rows + 1)
-    q_rows = probe.collect()
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"ivfpq_topk collects the query side; it has > {max_query_rows} "
-            f"rows — shard the query batch"
-        )
-
-    def luts_for(vec):
-        out = []
-        for j, book in enumerate(books):
-            t = {
-                cid: round(
-                    sum(
-                        (a - b) * (a - b)
-                        for a, b in zip(vec[j * sub : (j + 1) * sub], c)
-                    ),
-                    9,
-                )
-                for cid, c in book.items()
-            }
-            out.append([t[c] for c in sorted(t)])
-        return out
-
+    q_rows = _collect_capped(
+        queries.select(query_id, query_vec), max_query_rows,
+        "ivfpq_topk collects the query side to the driver",
+        "Shard the query batch.",
+    )
     # one (query_id, list_id, luts) row per PROBED list — the probe gate
     # becomes the broadcast equi-join below, and residual mode (where the
     # tables genuinely differ per probed list: the query's residual vs
@@ -1486,69 +1422,23 @@ def ivfpq_topk(
     lut_rows = []
     for qid, qvec in q_rows:
         qd = [float(x) for x in qvec]
-        dists = sorted(
-            (
-                (round(sum((a - b) * (a - b) for a, b in zip(qd, c)), 9), cid)
-                for cid, c in coarse.items()
-            )
-        )
-        probed = sorted(cid for _, cid in dists[:nprobe])
-        if residual:
-            for lid in probed:
-                lut_rows.append(
-                    (qid, lid,
-                     *luts_for([a - b for a, b in zip(qd, coarse[lid])]))
-                )
-        else:
-            luts = luts_for(qd)
-            for lid in probed:
-                lut_rows.append((qid, lid, *luts))
-
-    if use_arrow_routing:
-        staged = routed.select(
-            F.col(corpus_id).alias("neighbor_id"), "list_id", "__vv"
-        )
-    else:
-        list_col = _kmeans_best(f"`{corpus_vec}`", coarse)["centroid_id"]
-        staged = corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            list_col.alias("list_id"),
-            F.col(corpus_vec).cast("array<double>").alias("__vv"),
-        )
-        if residual:
-            ctr2 = F.element_at(centers_arr, _list_pos(F.col("list_id")) + 1)
-            staged = staged.withColumn(
-                "__vv", F.zip_with(F.col("__vv"), ctr2, lambda x, y: x - y)
-            )
-    code_cols = [
-        _kmeans_best(f"slice(`__vv`, {j * sub + 1}, {sub})", book)[
-            "centroid_id"
-        ].alias(f"__code_{j}")
-        for j, book in enumerate(books)
-    ]
-    coded = staged.select("neighbor_id", "list_id", *code_cols)
+        dists = sorted((_sq_dist(qd, c), cid) for cid, c in coarse.items())
+        luts = None if residual else _adc_tables(qd, books, sub)
+        for lid in sorted(cid for _, cid in dists[:nprobe]):
+            if residual:
+                resid = [a - b for a, b in zip(qd, coarse[lid])]
+                luts = _adc_tables(resid, books, sub)
+            lut_rows.append((qid, lid, *luts))
+    coded = staged.select("neighbor_id", "list_id", *_pq_codes("__vv", books, sub))
     qplan = _query_lut_frame(queries, query_id, lut_rows, m, with_list_id=True)
-
-    total = F.lit(0.0)
-    for j in range(m):
-        total = total + F.element_at(
-            F.col(f"__lut_{j}"), F.col(f"__code_{j}") + 1
-        )
     # the broadcast equi-join on list_id IS the probe gate: a corpus row
     # pairs with exactly the queries that probed its list, and the ADC
     # expression stays m lookups regardless of |Q| (the literal-per-query
     # formulation compiled |Q|·m·k_centers constants — codegen time grew
     # with the query batch)
-    scored = coded.join(F.broadcast(qplan), "list_id").select(
-        "query_id", "neighbor_id", "list_id", F.round(total, 9).alias("adc")
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "list_id", "adc", "rank")
+    return _adc_ranked(
+        coded.join(F.broadcast(qplan), "list_id"), m, k, exclude_self,
+        keep=("list_id",),
     )
 
 
@@ -1582,49 +1472,22 @@ def l2_topk(
     probe = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
     )
-    n_q = probe.limit(max_query_rows + 1).count()
-    if n_q > max_query_rows:
-        raise ValueError(
-            f"l2_topk broadcasts the query side; it has > {max_query_rows} rows"
-        )
-    dim = _probe_dim(corpus, corpus_vec)
-    fold = F.aggregate(
-        F.zip_with(
-            F.col(corpus_vec),
-            F.col("__qv"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    _collect_capped(
+        probe.select("query_id"), max_query_rows,
+        "l2_topk broadcasts the query side",
+        "Shard the query side or sample it for audits.",
     )
-    if dim:
-        # guarded flat codegen chain — same accumulation order as the
-        # fold, so the 9dp-rounded distance is bit-identical (the fold is
-        # CodegenFallback: it ran interpreted per pair, the dominant cost
-        # of the |Q|·|C| exact scan)
-        d2_raw = F.when(
-            (F.size(corpus_vec) == dim) & (F.size("__qv") == dim),
-            F.expr(V.d2_chain_sql(f"`{corpus_vec}`", "`__qv`", dim)),
-        ).otherwise(fold)
-    else:
-        d2_raw = fold
-    d2 = F.round(d2_raw, 9)
+    dim = _probe_dim(corpus, corpus_vec)
     scored = (
-        corpus.select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.col(corpus_vec).alias(corpus_vec),
-        )
+        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec))
         .join(
             F.broadcast(probe),
             F.lit(True) if not exclude_self
             else F.col("query_id") != F.col("neighbor_id"),
         )
-        .select("query_id", "neighbor_id", d2.alias("d2"))
+        .select(
+            "query_id", "neighbor_id",
+            F.round(_d2_score(corpus_vec, "__qv", dim), 9).alias("d2"),
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "d2", "rank")
-    )
+    return _ranked(scored, k, by="d2", desc=False)

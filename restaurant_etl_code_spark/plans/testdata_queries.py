@@ -1848,8 +1848,8 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with nprobe = n_lists (full probe): the inverted-list
     plumbing (centroid assignment → equi-join on list_id → rank) must
     reproduce brute-force top-k EXACTLY, so the oracle is the same SQL as
-    ann_cosine_topk. The production path swaps in fit_centroids_kmeans and
-    nprobe < n_lists (tested in tests/test_dedup_similarity.py)."""
+    ann_cosine_topk. The production path swaps in trained kmeans_centers
+    centroids and nprobe < n_lists (tested in tests/test_dedup_similarity.py)."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = similarity.centroids_by_id(emb, n=8)
     return similarity.ivf_topk(

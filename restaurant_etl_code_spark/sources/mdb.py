@@ -19,9 +19,13 @@ into three pieces:
    not a scale problem.
 3. ``read_mdb_catalog_distributed`` — the fan-out path for MANY files: a
    ``binaryFile`` scan ships each file's bytes to an executor, where
-   ``mapInPandas`` runs the extractor and parses rows locally. One task per
+   ``mapInPandas`` runs the extractor and emits the CSV lines. One task per
    file, zero driver involvement — ten thousand retailer MDB drops land as
    one declarative scan.
+
+Both readers parse their lines with the same tail (``_parse_lines``): one
+parse contract, so an all-digit barcode stays a string with its leading
+zeros on either path.
 
 The real ``mdb-export`` needs a *file path*, so the distributed wrapper
 spills each row's bytes to executor-local tmp before invoking it; the fake
@@ -164,31 +168,19 @@ def read_mdb_catalog(
     reference extraction.py:146-155 semantics, including the NaN→0
     default).
 
-    The lines are split the way Spark's text input splits a file (CR, LF
-    or CRLF), blank lines and the header row are dropped as its CSV
-    reader does, and ``from_csv`` parses each line with the reader's
-    parser and options. The lines travel as an Arrow-built local
-    relation: no staging file to clean up, no Python worker at scan time,
-    and a size estimate small enough for Catalyst to broadcast it."""
+    The lines travel as an Arrow-built local relation: no staging file to
+    clean up, no Python worker at scan time, and a size estimate small
+    enough for Catalyst to broadcast it."""
     import pandas as pd
 
     with open(mdb_path, "rb") as f:
         mdb_bytes = f.read()
     extract = extractor or _sniff_extractor(mdb_bytes)
-    lines = [
-        ln for ln in re.split(r"\r\n|\r|\n", extract(mdb_bytes, table))
-        if ln.strip()
-    ][1:]
+    lines = _csv_lines(extract(mdb_bytes, table))
     text = spark.createDataFrame(
         pd.DataFrame({"value": pd.Series(lines, dtype=object)}), "value string"
     )
-    ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in schemas.GROCERY_ARTICLES_RAW.fields
-    )
-    return _fill_quantity(
-        text.select(F.from_csv("value", ddl).alias("r")).select("r.*")
-    )
+    return _parse_lines(text)
 
 
 def read_mdb_catalog_distributed(
@@ -203,14 +195,7 @@ def read_mdb_catalog_distributed(
     ``container_name`` from the file's parent directory the way the JSON
     source derives it from the blob URL (P14)."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    # copy — StructType.add mutates in place, and the base schema is shared
-    out_schema = T.StructType(
-        list(schemas.GROCERY_ARTICLES_RAW.fields)
-        + [T.StructField("container_name", T.StringType(), True)]
-    )
-    col_order = [f.name for f in schemas.GROCERY_ARTICLES_RAW.fields]
     extract = extractor  # closure-captured; None → sniff per file
 
     def decode(batches: Iterable["pd.DataFrame"]):
@@ -218,17 +203,37 @@ def read_mdb_catalog_distributed(
             for _, row in pdf.iterrows():
                 raw = bytes(row["content"])
                 ex = extract or _sniff_extractor(raw)
-                tbl = pd.read_csv(io.StringIO(ex(raw, table)))
-                for c in col_order:
-                    if c not in tbl.columns:
-                        tbl[c] = None
-                tbl = tbl[col_order]
-                if "QteMain" in tbl.columns:
-                    tbl["QteMain"] = tbl["QteMain"].fillna(0)
-                tbl["container_name"] = os.path.basename(
-                    os.path.dirname(row["path"])
-                )
-                yield tbl
+                yield pd.DataFrame({
+                    "value": pd.Series(_csv_lines(ex(raw, table)), dtype=object),
+                    "container_name": os.path.basename(os.path.dirname(row["path"])),
+                })
 
     raw = spark.read.format("binaryFile").load(path)
-    return raw.select("path", "content").mapInPandas(decode, schema=out_schema)
+    return _parse_lines(
+        raw.select("path", "content").mapInPandas(
+            decode, schema="value string, container_name string"
+        )
+    )
+
+
+def _csv_lines(csv_text: str) -> list[str]:
+    """Data lines of an extracted table, split the way Spark's text input
+    splits a file (CR, LF or CRLF), with blank lines and the header row
+    dropped as its CSV reader does."""
+    return [ln for ln in re.split(r"\r\n|\r|\n", csv_text) if ln.strip()][1:]
+
+
+def _parse_lines(text: DataFrame) -> DataFrame:
+    """The grocery parse both MDB readers share: ``from_csv`` over the
+    ``value`` lines with the GROCERY_ARTICLES_RAW schema and the reader's
+    parser and options (columns by position, as the CSV source with a
+    schema reads them), other columns carried along, then the QteMain
+    fill."""
+    ddl = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in schemas.GROCERY_ARTICLES_RAW.fields
+    )
+    extra = [c for c in text.columns if c != "value"]
+    return _fill_quantity(
+        text.select(F.from_csv("value", ddl).alias("r"), *extra).select("r.*", *extra)
+    )

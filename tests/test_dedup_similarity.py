@@ -117,14 +117,17 @@ def test_ivf_full_probe_equals_exact(spark):
 
 
 def test_ivf_kmeans_partial_probe(spark):
-    """Production shape: seeded k-means centroids, nprobe < n_lists.
+    """Production shape: trained Lloyd k-means centroids, nprobe < n_lists.
     Results are a per-query top-k over a restricted candidate set — ≤ k
     rows per query, all drawn from the corpus, ranks contiguous from 1."""
     from restaurant_etl_code_spark.sources import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    cents = similarity.fit_centroids_kmeans(emb, n=4, seed=42)
+    centers = similarity.kmeans_centers(emb, n=4, iterations=10)
+    cents = spark.createDataFrame(
+        sorted(centers.items()), "centroid_id int, centroid array<double>"
+    )
     out = similarity.ivf_topk(queries, emb, cents, k=3, nprobe=2).collect()
     by_q = {}
     for r in out:

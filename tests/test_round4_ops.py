@@ -69,6 +69,29 @@ def test_read_mdb_catalog_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
     assert not list(tmp.glob("mdb_staging_*"))
 
 
+def test_mdb_readers_keep_leading_zero_codes(spark, tmp_path):
+    # all-digit barcodes: both readers parse them as strings, zeros intact,
+    # and agree row for row
+    csv = (
+        "Article,Description,QteMain,Taxe2,PrixVente\n"
+        "0012345678905,milk,1.0,True,0.99\n"
+        "0098765432109,eggs,,False,2.49\n"
+    )
+    d = tmp_path / "storeA"
+    d.mkdir()
+    p = str(d / "cat.mdb")
+    mdb.write_fake_mdb(p, {"Articles": csv})
+    single = mdb.read_mdb_catalog(spark, p, "Articles")
+    fanout = mdb.read_mdb_catalog_distributed(spark, p, "Articles")
+    assert sorted(r["Article"] for r in single.collect()) == [
+        "0012345678905", "0098765432109"
+    ]
+    assert sorted(map(tuple, fanout.drop("container_name").collect())) == sorted(
+        map(tuple, single.collect())
+    )
+    assert {r["container_name"] for r in fanout.collect()} == {"storeA"}
+
+
 def test_read_mdb_catalog_distributed(spark, tmp_path):
     # two containers in differently-named parent dirs -> container_name
     for store in ("storeA", "storeB"):
@@ -178,16 +201,39 @@ def test_simhash_banded_wide_hamming_still_exact(spark):
 
 # ---------------------------------------------------------- scale guards
 
-def test_cosine_topk_guards_large_query_side(spark):
+# entry -> (call with query side, corpus and cap; what its refusal names)
+_GUARDED_ENTRIES = {
+    "cosine_topk": (lambda q, c, cap: similarity.cosine_topk(
+        q, c, k=2, max_query_rows=cap), "bucketed_cosine_topk or ivf_topk"),
+    "pq_adc_topk": (lambda q, c, cap: similarity.pq_adc_topk(
+        q, c, m=2, k_centers=2, k=2, max_query_rows=cap), "use ivf_topk"),
+    "ivfpq_topk": (lambda q, c, cap: similarity.ivfpq_topk(
+        q, c, n_lists=2, nprobe=2, m=2, k_centers=2, k=2,
+        max_query_rows=cap), "Shard the query batch"),
+    "l2_topk": (lambda q, c, cap: similarity.l2_topk(
+        q, c, k=2, max_query_rows=cap), "sample it for audits"),
+    # the exact near-dup path has no separate query side: its whole input
+    # ships to every task, so the cap applies to it
+    "embedding_near_dup_pairs": (lambda q, c, cap: (
+        similarity.embedding_near_dup_pairs(
+            q, threshold=0.0, nbits=0, exact_max_rows=cap)),
+        "sample the corpus"),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_GUARDED_ENTRIES))
+def test_exact_entries_guard_large_query_side(spark, entry):
     emb = spark.range(20).select(
         F.col("id").alias("vec_id"),
         F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
     )
-    with pytest.raises(ValueError, match="bucketed_cosine_topk"):
-        similarity.cosine_topk(emb, emb, max_query_rows=10)
-    # under the cap the exact path still runs
-    out = similarity.cosine_topk(emb.limit(3), emb, k=2, max_query_rows=10)
-    assert out.count() == 6
+    run, names = _GUARDED_ENTRIES[entry]
+    with pytest.raises(ValueError, match=f"> 10 rows.*{names}"):
+        run(emb, emb, 10)
+    # under the cap the exact path still runs: 3 queries x 2 neighbors, or
+    # the 3 pairs of 3 vectors
+    out = run(emb.limit(3), emb, 10)
+    assert out.count() == (3 if entry == "embedding_near_dup_pairs" else 6)
 
 
 def test_cosine_topk_empty_query_side_is_typed_empty(spark):

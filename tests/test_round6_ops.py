@@ -759,8 +759,19 @@ def test_pq_encode_reconstruction(spark):
     assert len({codes0[i] for i in out if i % 2 == 1}) == 1
     assert codes0[0] != codes0[1]
     assert all(out[i]["err_0"] < 1.0 and out[i]["err_1"] < 1.0 for i in out)
-    with pytest.raises(ValueError, match="not divisible"):
-        similarity.pq_encode(emb, m=3, k=2)
+
+
+@pytest.mark.parametrize("entry", ["pq_encode", "pq_adc_topk", "ivfpq_topk"])
+def test_pq_entries_reject_indivisible_width(spark, entry):
+    from restaurant_etl_code_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, 2.0, 3.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    args = (emb,) if entry == "pq_encode" else (emb, emb)
+    with pytest.raises(ValueError, match="dim 4 not divisible into 3"):
+        getattr(similarity, entry)(*args, m=3)
 
 
 def test_pq_adc_topk_recovers_near_neighbors(spark):
