@@ -31,6 +31,11 @@ from pyspark.sql import types as T
 
 from restaurant_etl_code_spark.functions import cleansing
 from restaurant_etl_code_spark.operators._arrow import widen_for_codec as _widen
+from restaurant_etl_code_spark.operators.dedup import (
+    _drop_heavy_keys,
+    _persist_intermediate,
+    _py_norm_tokens,
+)
 
 __all__ = ["skipped_rows", "group_and_chunk_templates", "cdc_chunks", "cdc_containment_pairs"]
 
@@ -213,8 +218,6 @@ def _cdc_chunks_arrow(
     ``functions.text.tokens``, same 52-bit md5-hex-prefix boundary test,
     same per-chunk md5) — the r17 A/B that motivated it: the boundary
     lambda dominated the cdc scans' executor compute."""
-    from restaurant_etl_code_spark.operators.dedup import _py_norm_tokens
-
     id_field = docs.schema[id_col]
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -304,25 +307,16 @@ def cdc_containment_pairs(
     # position) feeds four consumers (sizes, the df valve, both join
     # sides) — without a cache it re-executes per consumer (measured 4x
     # the stage cost at sf0.1)
-    ch = (
+    ch = _persist_intermediate(
         cdc_chunks(
             docs, id_col=id_col, text_col=text_col, window=window,
             divisor=divisor,
         )
         .select(id_col, F.xxhash64("chunk_hash").alias("chunk_h"))
         .distinct()
-        .persist()
     )
     sizes = ch.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_chunks"))
-    kept = ch
-    if max_df is not None:
-        hot = (
-            ch.groupBy("chunk_h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > int(max_df))
-            .select("chunk_h")
-        )
-        kept = ch.join(hot, "chunk_h", "left_anti")
+    kept = ch if max_df is None else _drop_heavy_keys(ch, "chunk_h", max_df)
     a, b = kept.alias("a"), kept.alias("b")
     inter = (
         a.join(b, "chunk_h")

@@ -22,14 +22,28 @@ Scale notes (the design constraint for every function here):
   identical across Python, Spark, DuckDB, and any other engine, which makes
   every operator here exactly oracle-checkable — and reproducible across
   reruns of a 100 TB job, unlike JVM-seeded ``xxhash64`` defaults.
+
+Each step the entries share has ONE private helper:
+
+- ``_text_stage`` (with its memoized n-gram hasher ``_ngram_hashes``) is
+  the Arrow text stage behind ``minhash_signatures``, ``simhash``,
+  ``shingle_rows`` and ``winnow_fingerprints``;
+- ``_band_self_join`` is the persisted, co-partitioned LSH band self-join
+  behind ``lsh_candidate_pairs``, ``minhash_estimate_pairs`` and
+  ``incremental_lsh_pairs`` (``_est_jaccard`` is the signature agreement
+  fold it and ``minhash_fuzzy_join`` score with);
+- ``_drop_heavy_keys`` is the heavy-key valve of every inverted index
+  (n-gram, winnow, fuzzy-join bands, CDC chunks), and ``_pair_counts``
+  the shared-key pair count of the n-gram and winnow indexes.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterator
+from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -211,6 +225,88 @@ def _py_hash52(s: str) -> int:
 _MEMO_MAX_ENTRIES = 1 << 20
 
 
+def _ngram_hashes(
+    toks: list[str], n: int, memo: dict[str, int], memo_max: int
+) -> list[int]:
+    """``_py_hash52`` of every token ``n``-gram (``n=1``: every token)
+    through the Arrow batch's ``memo``: near-dup corpora repeat most
+    n-grams across documents (measured ~10% unique at sf0.1), so one md5
+    per *distinct* n-gram replaces one per occurrence. The memo stops
+    growing at ``memo_max`` entries; later misses just recompute."""
+    grams = toks if n == 1 else [
+        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+    ]
+    memo_get = memo.get
+    out = []
+    for s in grams:
+        v = memo_get(s)
+        if v is None:
+            v = _py_hash52(s)
+            if len(memo) < memo_max:
+                memo[s] = v
+        out.append(v)
+    return out
+
+
+def _text_stage(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    fields: list[T.StructField],
+    per_doc: Callable,
+    *,
+    normalize: bool = False,
+    null_row: bool = False,
+) -> DataFrame:
+    """The ONE Arrow text stage: a row-local, zero-shuffle ``mapInPandas``
+    over (id, text). For each document, ``per_doc(tokens, hashes)`` returns
+    one list of values per ``fields`` entry, all of one length: the rows
+    the document emits behind its id (None or empty: none). Tokens are
+    ``_py_norm_tokens`` of the text, after the NFC + invisible scrub when
+    ``normalize``; ``hashes(tokens, n)`` is ``_ngram_hashes`` over a
+    per-batch memo. NULL text is skipped, or emits one all-NULL row when
+    ``null_row``. A batch with no output yields nothing: empty
+    object-dtype frames break Arrow list conversion.
+
+    The memo cap is read here, while the plan is built, and ships inside
+    the closure."""
+    names = [id_col] + [f.name for f in fields]
+    null_out = [[None]] * len(fields) if null_row else None
+    memo_max = _MEMO_MAX_ENTRIES
+
+    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            memo: dict[str, int] = {}
+
+            def hashes(toks: list[str], n: int) -> list[int]:
+                return _ngram_hashes(toks, n, memo, memo_max)
+
+            cols: list[list] = [[] for _ in names]  # ids first
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                if text is None:
+                    out = null_out
+                else:
+                    if normalize:
+                        text = _py_normalize_scrub(text)
+                    out = per_doc(_py_norm_tokens(text), hashes)
+                if not out:
+                    continue
+                cols[0].extend([doc_id] * len(out[0]))
+                for col, values in zip(cols[1:], out):
+                    col.extend(values)
+            if not cols[0]:
+                continue
+            yield pd.DataFrame({
+                name: pd.Series(col, dtype=object)
+                for name, col in zip(names, cols)
+            })
+
+    schema = T.StructType([df.schema[id_col], *fields])
+    return _widen(df.select(id_col, text_col), id_col, per_row="light").mapInPandas(
+        mapper, schema=schema
+    )
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16,
     shingle_n: int = 3, normalize: bool = False,
@@ -236,71 +332,29 @@ def minhash_signatures(
     Cost is row-local (one C-loop NFC + one regex sub per doc) inside
     the same Arrow stage; the shuffle shape is unchanged.
     """
-    id_field = df.schema[id_col]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        # universal family as int64 vectors: a_i·h' + b_i < 2^63 for
-        # h' < p = 2^31−1, so numpy arithmetic is exact (see
-        # MINHASH_PRIME for why the mod-p reduction is load-bearing)
-        p = MINHASH_PRIME
-        coeff_a = np.array(
-            [(i * MINHASH_SALT) % (p - 1) + 1 for i in range(num_hashes)],
-            dtype=np.int64,
-        )
-        coeff_b = np.array(
-            [(i * MINHASH_SALT) % p for i in range(num_hashes)],
-            dtype=np.int64,
-        )
-        for pdf in batches:
-            ids, sigs = [], []
-            # per-BATCH shingle-hash memo: near-dup corpora repeat most
-            # shingles across documents (measured ~10% unique at sf0.1),
-            # so one md5 per *distinct* shingle per batch replaces one per
-            # occurrence. Batch-scoped AND entry-capped
-            # (_MEMO_MAX_ENTRIES), so memory stays bounded even for a
-            # mostly-unique batch at a huge maxRecordsPerBatch.
-            memo: dict[str, int] = {}
-            memo_get = memo.get
-            h52 = _py_hash52
-            memo_max = _MEMO_MAX_ENTRIES
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                if normalize:
-                    text = _py_normalize_scrub(text)
-                toks = _py_norm_tokens(text)
-                if len(toks) < shingle_n:
-                    continue
-                hs_list = []
-                for i in range(len(toks) - shingle_n + 1):
-                    s = " ".join(toks[i : i + shingle_n])
-                    v = memo_get(s)
-                    if v is None:
-                        v = h52(s)
-                        if len(memo) < memo_max:
-                            memo[s] = v
-                    hs_list.append(v)
-                hs = np.array(hs_list, dtype=np.int64)
-                ids.append(doc_id)
-                # (|shingles| × num_hashes) multiply-add-mod + column-min
-                # in C; the mod-p wrap is load-bearing (see MINHASH_PRIME)
-                sigs.append(
-                    (((hs[:, None] % p) * coeff_a + coeff_b) % p)
-                    .min(axis=0).tolist()
-                )
-            if not ids:
-                continue  # empty object-dtype frames break Arrow list conversion
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype=object), "signature": pd.Series(sigs, dtype=object)}
-            )
-
-    schema = T.StructType(
-        [id_field, T.StructField("signature", T.ArrayType(T.LongType()), False)]
+    # universal family as int64 vectors: a_i·h' + b_i < 2^63 for
+    # h' < p = 2^31−1, so numpy arithmetic is exact
+    p = MINHASH_PRIME
+    coeff_a = np.array(
+        [(i * MINHASH_SALT) % (p - 1) + 1 for i in range(num_hashes)],
+        dtype=np.int64,
     )
-    return _widen(df.select(id_col, text_col), id_col, per_row="light").mapInPandas(
-        mapper, schema=schema
+    coeff_b = np.array(
+        [(i * MINHASH_SALT) % p for i in range(num_hashes)], dtype=np.int64
+    )
+
+    def signature(toks, hashes):
+        if len(toks) < shingle_n:
+            return None
+        hs = np.array(hashes(toks, shingle_n), dtype=np.int64)
+        # (|shingles| × num_hashes) multiply-add-mod + column-min in C
+        return [[(((hs[:, None] % p) * coeff_a + coeff_b) % p)
+                 .min(axis=0).tolist()]]
+
+    return _text_stage(
+        df, id_col, text_col,
+        [T.StructField("signature", T.ArrayType(T.LongType()), False)],
+        signature, normalize=normalize,
     )
 
 
@@ -386,6 +440,58 @@ def _banded_rows(
     ).select(*cols)
 
 
+def _pair_ids(id_col: str) -> list[Column]:
+    """(id_a, id_b) out of a self-join aliased ``a``/``b``."""
+    return [F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")]
+
+
+def _band_self_join(
+    signatures: DataFrame,
+    id_col: str,
+    bands: int,
+    rows_per_band: int,
+    num_hashes: int | None,
+    *,
+    keep_signature: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The ONE LSH band self-join: returns the banded rows, repartitioned
+    on the bucket key and PERSISTED (both join sides, and any other
+    consumer, read one Arrow signature pass from a co-partitioned cache),
+    and their self-join aliased ``a``/``b`` on (band_idx, band_hash) with
+    ``a.id < b.id`` — one row per colliding band, so callers ``distinct``.
+    ``num_hashes`` is the optional plan-time geometry check; the per-row
+    check rides ``_banded_rows``. With ``keep_signature`` both sides carry
+    full signatures, so the join is hinted to sort-merge: a broadcast
+    build (AQE's pick at test scale) would OOM at corpus scale."""
+    if num_hashes is not None:
+        _check_band_geometry(num_hashes, bands, rows_per_band)
+    banded = _persist_intermediate(
+        _banded_rows(
+            signatures, id_col, bands, rows_per_band,
+            keep_signature=keep_signature,
+        ).repartition("band_idx", "band_hash")
+    )
+    right = banded.alias("b")
+    if keep_signature:
+        right = right.hint("merge")
+    pairs = banded.alias("a").join(right, ["band_idx", "band_hash"]).filter(
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
+    return banded, pairs
+
+
+def _est_jaccard(sig_a: Column, sig_b: Column, width: Column) -> Column:
+    """Signature-estimated Jaccard, 6dp: the number of agreeing MinHash
+    components (a codegen ``zip_with`` + ``aggregate`` fold, no join back
+    to the signatures) over ``width``."""
+    agree = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return F.round(agree.cast("double") / width, 6).alias("est_jaccard")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
@@ -427,22 +533,9 @@ def lsh_candidate_pairs(
     thresholds, size the geometry with :func:`lsh_geometry_plan` /
     :func:`choose_band_geometry` rather than guessing.
     """
-    if num_hashes is not None:
-        _check_band_geometry(num_hashes, bands, rows_per_band)
-    banded = _banded_rows(signatures, id_col, bands, rows_per_band)
-    banded = _persist_intermediate(
-        banded.repartition("band_idx", "band_hash"))
-    left = banded.alias("a")
-    right = banded.alias("b")
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    _, pairs = _band_self_join(
+        signatures, id_col, bands, rows_per_band, num_hashes)
+    return pairs.select(*_pair_ids(id_col)).distinct()
 
 
 def lsh_component_edges(
@@ -533,39 +626,15 @@ def minhash_estimate_pairs(
     Geometry is verified per row against the actual signature width in
     ``_banded_rows``; ``num_hashes`` is an optional plan-time hint.
     """
-    if num_hashes is not None:
-        _check_band_geometry(num_hashes, bands, rows_per_band)
-    banded = _banded_rows(
-        signatures, id_col, bands, rows_per_band, keep_signature=True
+    _, pairs = _band_self_join(
+        signatures, id_col, bands, rows_per_band, num_hashes,
+        keep_signature=True,
     )
-    banded = _persist_intermediate(
-        banded.repartition("band_idx", "band_hash"))
-    left = banded.alias("a")
-    # merge hint: both sides are corpus-sized banded rows carrying full
-    # signatures; a broadcast build (AQE's pick at test scale) would OOM
-    # at corpus scale
-    right = banded.alias("b").hint("merge")
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("a.signature"),
-            F.col("b.signature"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(
-                agree.cast("double") / F.size(F.col("a.signature")), 6
-            ).alias("est_jaccard"),
-        )
-        .distinct()
-    )
+    sig_a = F.col("a.signature")
+    return pairs.select(
+        *_pair_ids(id_col),
+        _est_jaccard(sig_a, F.col("b.signature"), F.size(sig_a)),
+    ).distinct()
 
 
 def minhash_fuzzy_join(
@@ -602,7 +671,7 @@ def minhash_fuzzy_join(
     inflates its join partition by |cluster_c|·|cluster_q| — quadratic in
     cluster size. With the valve set, corpus band keys held by more than
     ``max_band_freq`` corpus rows are dropped from BOTH sides before the
-    join (one counter agg + a key-frequency semi-filter). The trade is
+    join (``_drop_heavy_keys``: one counter agg + an anti-join). The trade is
     explicit: queries matching only into a mega-cluster lose those
     candidates — exactly the boilerplate cluster a curation pipeline
     dedups separately. Default None (off) preserves exact semantics.
@@ -610,8 +679,6 @@ def minhash_fuzzy_join(
     Returns (query_id, match_id, est_jaccard, rank), rank ≤ k, ties
     broken by match_id.
     """
-    from pyspark.sql import Window
-
     _check_band_geometry(num_hashes, bands, rows_per_band)
     sig_q = minhash_signatures(queries, id_col, text_col, num_hashes, shingle_n)
     sig_c = minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_n)
@@ -627,32 +694,19 @@ def minhash_fuzzy_join(
     # broadcast build (AQE's pick at test scale) would OOM at corpus scale
     c = banded(sig_c, "match").hint("merge")
     if max_band_freq is not None:
-        hot = (
-            c.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > int(max_band_freq))
-            .select("band_idx", "band_hash")
-        )
-        # hot-key table is tiny by construction (keys ABOVE the cap);
-        # anti-join both sides so the mega-cluster never reaches the join
-        c = c.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-        q = q.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("query_sig"),
-            F.col("match_sig"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
+        # keys hot in the CORPUS leave both sides, so the mega-cluster
+        # never reaches the join
+        keys = ["band_idx", "band_hash"]
+        q = _drop_heavy_keys(q, keys, max_band_freq, counted=c)
+        c = _drop_heavy_keys(c, keys, max_band_freq)
     scored = (
         q.join(c, ["band_idx", "band_hash"])
         .select(
             "query_id",
             "match_id",
-            F.round(agree.cast("double") / F.lit(float(num_hashes)), 6).alias(
-                "est_jaccard"
+            _est_jaccard(
+                F.col("query_sig"), F.col("match_sig"),
+                F.lit(float(num_hashes)),
             ),
         )
         .distinct()
@@ -670,48 +724,17 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     set when the signed sum over tokens of (bit b set ? +1 : −1) is positive.
     Arrow-batched Python stage, one md5 per token, numpy for the bit votes —
     zero shuffle."""
-    import numpy as np
+    bit_idx = np.arange(bits, dtype=np.int64)
+    weights = np.int64(1) << bit_idx
 
-    id_field = df.schema[id_col]
+    def fingerprint(toks, hashes):
+        hs = np.array(hashes(toks, 1), dtype=np.int64)
+        votes = (((hs[:, None] >> bit_idx) & 1) * 2 - 1).sum(axis=0)
+        return [[int(weights[votes > 0].sum())]]
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_idx = np.arange(bits, dtype=np.int64)
-        weights = (np.int64(1) << bit_idx)
-        for pdf in batches:
-            ids, fps = [], []
-            # per-batch token-hash memo (tokens repeat far more than
-            # shingles — stopwords dominate), entry-capped; see
-            # minhash_signatures
-            memo: dict[str, int] = {}
-            memo_get = memo.get
-            h52 = _py_hash52
-            memo_max = _MEMO_MAX_ENTRIES
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    ids.append(doc_id)
-                    fps.append(None)
-                    continue
-                hs_list = []
-                for t in _py_norm_tokens(text):
-                    v = memo_get(t)
-                    if v is None:
-                        v = h52(t)
-                        if len(memo) < memo_max:
-                            memo[t] = v
-                    hs_list.append(v)
-                hs = np.array(hs_list, dtype=np.int64)
-                votes = (((hs[:, None] >> bit_idx) & 1) * 2 - 1).sum(axis=0)
-                fps.append(int(weights[votes > 0].sum()))
-                ids.append(doc_id)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype=object), "simhash": pd.Series(fps, dtype=object)}
-            )
-
-    schema = T.StructType([id_field, T.StructField("simhash", T.LongType(), True)])
-    return _widen(df.select(id_col, text_col), id_col, per_row="light").mapInPandas(
-        mapper, schema=schema
+    return _text_stage(
+        df, id_col, text_col, [T.StructField("simhash", T.LongType(), True)],
+        fingerprint, null_row=True,
     )
 
 
@@ -729,41 +752,19 @@ def shingle_rows(
     partitioned on the id). Only valid when no shingle is dropped between
     here and the consumer (the ``max_df`` cap recomputes sizes after
     capping, so the capped path must NOT use this)."""
-    id_field = df.schema[id_col]
+    def shingles(toks, hashes):
+        distinct = list({
+            " ".join(toks[i : i + shingle_n])
+            for i in range(len(toks) - shingle_n + 1)
+        })
+        if emit_set_size:
+            return [distinct, [len(distinct)] * len(distinct)]
+        return [distinct]
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, shingles, sizes = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                toks = _py_norm_tokens(text)
-                distinct = {
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                }
-                for s in distinct:
-                    ids.append(doc_id)
-                    shingles.append(s)
-                if emit_set_size:
-                    sizes.extend([len(distinct)] * len(distinct))
-            if not ids:
-                continue
-            data = {
-                id_col: pd.Series(ids, dtype=object),
-                "shingle": pd.Series(shingles, dtype=object),
-            }
-            if emit_set_size:
-                data["set_size"] = pd.Series(sizes, dtype="int64")
-            yield pd.DataFrame(data)
-
-    fields = [id_field, T.StructField("shingle", T.StringType(), False)]
+    fields = [T.StructField("shingle", T.StringType(), False)]
     if emit_set_size:
         fields.append(T.StructField("set_size", T.LongType(), False))
-    schema = T.StructType(fields)
-    return _widen(df.select(id_col, text_col), id_col, per_row="light").mapInPandas(
-        mapper, schema=schema
-    )
+    return _text_stage(df, id_col, text_col, fields, shingles)
 
 
 def hamming_distance(a: Column, b: Column) -> Column:
@@ -801,13 +802,15 @@ def simhash_banded_pairs(
     n_blocks = max_hamming + 1
     width = -(-bits // n_blocks)
     mask = (1 << width) - 1
+
+    def _block(col: str, j: int):
+        return F.shiftrightunsigned(F.col(col), j * width).bitwiseAND(F.lit(mask))
+
     blocks = F.array(
         *[
             F.struct(
                 F.lit(i).alias("block_idx"),
-                F.shiftrightunsigned(F.col(sim_col), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("block_bits"),
+                _block(sim_col, i).alias("block_bits"),
             )
             for i in range(n_blocks)
         ]
@@ -828,9 +831,6 @@ def simhash_banded_pairs(
     # candidate only in its FIRST matching block: every block before
     # block_idx must differ. Pure codegen comparisons on columns the rows
     # already carry — zero extra exchanges.
-    def _block(col: str, j: int):
-        return F.shiftrightunsigned(F.col(col), j * width).bitwiseAND(F.lit(mask))
-
     first_match = F.lit(True)
     for j in range(n_blocks):
         first_match = first_match & (
@@ -900,52 +900,76 @@ def _shingle_intersections(
 ) -> DataFrame:
     """Shared inverted-index intersection stage: (id_a < id_b, n_inter,
     size_a, size_b) per document pair sharing ≥1 (capped) shingle."""
-    if max_df is None:
-        # uncapped: no shingle is ever dropped, so the per-document size is
-        # known row-locally inside the Arrow stage — emitting it there
-        # removes the id-partitioned window (a full shuffle+sort of the
-        # inverted index) from the plan outright
-        shingled = _persist_intermediate(
-            shingle_rows(df, id_col, text_col, shingle_n, emit_set_size=True)
-            .withColumn("__sh", F.xxhash64("shingle"))
-            .drop("shingle")
+    # uncapped, no shingle is ever dropped, so the Arrow stage emits each
+    # document's size row-locally — no id-partitioned window (a full
+    # shuffle+sort of the inverted index) and no join-back
+    shingled = _persist_intermediate(
+        shingle_rows(
+            df, id_col, text_col, shingle_n, emit_set_size=max_df is None
         )
-    else:
-        rows = _persist_intermediate(
-            shingle_rows(df, id_col, text_col, shingle_n)
-            .withColumn("__sh", F.xxhash64("shingle"))
-            .drop("shingle")
-        )
-        # df cap as an ANTI-join against the HEAVY shingle set (df >
-        # max_df) — the winnow_pairs valve shape: the heavy set is the
-        # boilerplate tail (far smaller than the index), the df count is
-        # a map-side-combined hash aggregate, and AQE broadcasts the
-        # anti side at runtime, so the corpus-sized index never shuffles
-        # for the valve. The former window (count over partition by
-        # shingle hash) shuffled AND sorted the whole index instead.
-        heavy = (
-            rows.groupBy("__sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("__sh")
-        )
-        capped = rows.join(heavy, "__sh", "left_anti")
-        # set_size is computed after the cap: overlap scores are then exact
+        .withColumn("__sh", F.xxhash64("shingle"))
+        .drop("shingle")
+    )
+    if max_df is not None:
+        # set_size is counted after the cap: overlap scores are then exact
         # over the capped shingle universe (boilerplate excluded from
-        # numerator AND denominator), not a biased estimate of the uncapped
-        # value. Counter-sized aggregate + join-back (AQE broadcasts the
-        # per-doc counts when they fit) replaces the second full-index
-        # window shuffle+sort.
-        sizes = capped.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
-        shingled = _persist_intermediate(capped.join(sizes, id_col))
-    a = shingled.alias("a")
+        # numerator AND denominator), not a biased estimate of the
+        # uncapped value
+        shingled = _persist_intermediate(
+            _with_set_size(_drop_heavy_keys(shingled, "__sh", max_df), id_col)
+        )
     # merge hint: both sides of the inverted-index join are corpus-sized, so
     # it must never broadcast — the static size estimate of a persisted
     # relation undercounts and a broadcast build of the whole index OOMs
-    b = shingled.alias("b").hint("merge")
+    return _pair_counts(shingled.hint("merge"), id_col, "__sh")
+
+
+def _drop_heavy_keys(
+    rows: DataFrame,
+    keys: str | list[str],
+    cap: int,
+    *,
+    counted: DataFrame | None = None,
+) -> DataFrame:
+    """The ONE heavy-key valve of every inverted index here: drop from
+    ``rows`` each key held by more than ``cap`` rows of ``counted``
+    (default ``rows``) — a key shared by d rows emits d² join rows, so one
+    boilerplate key is unrunnable at corpus scale. The removal is a
+    ``left_anti`` join against the HEAVY set: that set is the boilerplate
+    tail (far smaller than the index), the count is a map-side-combined
+    hash aggregate (skew-safe on exactly those keys), and AQE broadcasts
+    the anti side at runtime, so the corpus-sized index never shuffles for
+    the valve."""
+    heavy = (
+        (rows if counted is None else counted)
+        .groupBy(keys)
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") > int(cap))
+        .select(keys)
+    )
+    return rows.join(heavy, keys, "left_anti")
+
+
+def _with_set_size(rows: DataFrame, id_col: str) -> DataFrame:
+    """``rows`` plus each document's row count as ``set_size``: a
+    counter-sized aggregate joined back (AQE broadcasts the per-doc counts
+    when they fit) instead of an id-partitioned window over the index."""
+    sizes = rows.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
+    return rows.join(sizes, id_col)
+
+
+def _pair_counts(index: DataFrame, id_col: str, key: str) -> DataFrame:
+    """(id_a < id_b, n_inter, size_a, size_b) for every document pair that
+    shares ≥1 ``key`` in the (id, key, set_size) inverted ``index``: a
+    self-join on the key whose pair aggregate carries counters, not text."""
+    a, b = index.alias("a"), index.alias("b")
     return (
-        a.join(b, (F.col("a.__sh") == F.col("b.__sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(
+            b,
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(*_pair_ids(id_col))
         .agg(
             F.count(F.lit(1)).alias("n_inter"),
             F.first(F.col("a.set_size")).alias("size_a"),
@@ -1219,11 +1243,8 @@ def incremental_lsh_pairs(
     Returns (id_a, id_b, pair_kind) with id_a < id_b, distinct;
     pair_kind in {'delta_index', 'delta_delta'}.
     """
-    if num_hashes is not None:
-        _check_band_geometry(num_hashes, bands, rows_per_band)
-    banded_d = _banded_rows(delta_signatures, id_col, bands, rows_per_band)
-    banded_d = _persist_intermediate(
-        banded_d.repartition("band_idx", "band_hash"))
+    banded_d, within = _band_self_join(
+        delta_signatures, id_col, bands, rows_per_band, num_hashes)
     banded_i = _banded_rows(index_signatures, id_col, bands, rows_per_band)
     d, i = banded_d.alias("d"), banded_i.alias("i")
     cross = (
@@ -1237,16 +1258,8 @@ def incremental_lsh_pairs(
             F.lit("delta_index").alias("pair_kind"),
         )
     )
-    a, b = banded_d.alias("a"), banded_d.alias("b")
-    within = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.lit("delta_delta").alias("pair_kind"),
-        )
-    )
+    within = within.select(
+        *_pair_ids(id_col), F.lit("delta_delta").alias("pair_kind"))
     return cross.unionByName(within).distinct()
 
 def canonical_by_quality(
@@ -1344,66 +1357,24 @@ def winnow_fingerprints(
     """
     if k < 1 or window < 1:
         raise ValueError(f"k={k} and window={window} must be >= 1")
-    id_field = df.schema[id_col]
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def fingerprints(toks, hashes):
+        n = len(toks) - k + 1
+        if n < 1:
+            return None
+        hs = np.array(hashes(toks, k), dtype=np.int64)
+        # fewer k-grams than the window: one window, the global min
+        sel = np.lib.stride_tricks.sliding_window_view(
+            hs, min(window, n)).min(axis=1)
+        return [[np.unique(sel).tolist()], [n]]
 
-        for pdf in batches:
-            ids, fps, ngrams = [], [], []
-            # per-batch k-gram-hash memo, entry-capped; see
-            # minhash_signatures
-            memo: dict[str, int] = {}
-            memo_get = memo.get
-            h52 = _py_hash52
-            memo_max = _MEMO_MAX_ENTRIES
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                if normalize:
-                    text = _py_normalize_scrub(text)
-                toks = _py_norm_tokens(text)
-                n = len(toks) - k + 1
-                if n < 1:
-                    continue
-                hs_list = []
-                for i in range(n):
-                    s = " ".join(toks[i : i + k])
-                    v = memo_get(s)
-                    if v is None:
-                        v = h52(s)
-                        if len(memo) < memo_max:
-                            memo[s] = v
-                    hs_list.append(v)
-                hs = np.array(hs_list, dtype=np.int64)
-                if n >= window:
-                    sel = np.lib.stride_tricks.sliding_window_view(
-                        hs, window
-                    ).min(axis=1)
-                else:
-                    sel = hs.min(keepdims=True)
-                ids.append(doc_id)
-                fps.append(np.unique(sel).tolist())
-                ngrams.append(n)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype=object),
-                    "fingerprints": pd.Series(fps, dtype=object),
-                    "n_grams": pd.Series(ngrams, dtype=object),
-                }
-            )
-
-    schema = T.StructType(
+    return _text_stage(
+        df, id_col, text_col,
         [
-            id_field,
             T.StructField("fingerprints", T.ArrayType(T.LongType()), False),
             T.StructField("n_grams", T.LongType(), False),
-        ]
-    )
-    return _widen(df.select(id_col, text_col), id_col, per_row="light").mapInPandas(
-        mapper, schema=schema
+        ],
+        fingerprints, normalize=normalize,
     )
 
 def winnow_pairs(
@@ -1471,41 +1442,19 @@ def winnow_pairs(
     """
     fps = _persist_intermediate(
         winnow_fingerprints(df, id_col, text_col, k=k, window=window))
-    inv = fps.select(
-        F.col(id_col).alias("__id"),
-        F.explode("fingerprints").alias("fp"),
-    )
+    inv = fps.select(id_col, F.explode("fingerprints").alias("fp"))
     if max_df is not None:
-        heavy = (
-            inv.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("fp")
-        )
-        inv = inv.join(heavy, "fp", "left_anti")
-    sizes = inv.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    inv = inv.join(sizes, "__id")
-    a, b = inv.alias("a"), inv.alias("b")
+        inv = _drop_heavy_keys(inv, "fp", max_df)
+    n = F.col("n_inter")
     return (
-        a.join(b, "fp")
-        .filter(F.col("a.__id") < F.col("b.__id"))
-        .groupBy(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.__n").alias("__na"),
-            F.col("b.__n").alias("__nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        _pair_counts(_with_set_size(inv, id_col), id_col, "fp")
+        .filter(n >= min_shared)
         .select(
             "id_a",
             "id_b",
-            "n_shared",
-            F.round(
-                F.col("n_shared")
-                / (F.col("__na") + F.col("__nb") - F.col("n_shared")),
-                6,
-            ).alias("overlap"),
+            n.alias("n_shared"),
+            F.round(n / (F.col("size_a") + F.col("size_b") - n), 6)
+            .alias("overlap"),
         )
     )
 

@@ -37,8 +37,11 @@ __all__ = [
 _BITS = 16  # bins per dimension = 2^16; 2 dims -> 32-bit Z-value
 
 
-def _bin_col(col: str, lo: float, hi: float) -> Column:
-    """Equi-width bin in [0, 2^_BITS): pure arithmetic, codegen-friendly."""
+def _bin_col(col: str, lo: float | None, hi: float | None) -> Column:
+    """Equi-width bin in [0, 2^_BITS): pure arithmetic, codegen-friendly.
+    An empty or all-NULL column has no bounds and bins to 0."""
+    if lo is None or hi is None:
+        return F.lit(0).cast("long")
     width = (hi - lo) or 1.0
     raw = ((F.col(col).cast("double") - F.lit(lo)) / F.lit(width)) * (1 << _BITS)
     return F.least(

@@ -448,9 +448,18 @@ def _all_pairs_near_dup_blas(
         "estimated on a few hundred k sampled vectors is the standard "
         "practice.",
     )
+    id_field = df.schema[id_col]
+    schema = T.StructType(
+        [
+            T.StructField("id_a", id_field.dataType),
+            T.StructField("id_b", id_field.dataType),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+    if not rows:  # nothing to pair: no job over the corpus
+        return df.sparkSession.createDataFrame([], schema)
     ids_arr = np.asarray([r[0] for r in rows])
     Mhat = _unit_rows(np.asarray([r[1] for r in rows], dtype=np.float64))
-    id_field = df.schema[id_col]
 
     def mapper(batches):
         for pdf in batches:
@@ -466,13 +475,6 @@ def _all_pairs_near_dup_blas(
                 {"id_a": cids[bi], "id_b": ids_arr[ci], "score": S[bi, ci]}
             )
 
-    schema = T.StructType(
-        [
-            T.StructField("id_a", id_field.dataType),
-            T.StructField("id_b", id_field.dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
     return _widen(df.select(id_col, vec_col), id_col, per_row="light").mapInPandas(
         mapper, schema=schema
     )

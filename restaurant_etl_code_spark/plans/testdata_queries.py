@@ -2040,7 +2040,9 @@ def _q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_exact",
             "n_found",
-            F.round(F.col("n_found") / F.col("n_exact"), 6).alias("recall"),
+            # try_divide: an empty corpus has no exact pairs, and recall
+            # over none is NULL (DuckDB's division by zero), not an error
+            F.round(F.try_divide("n_found", "n_exact"), 6).alias("recall"),
         )
     )
 
@@ -6609,6 +6611,10 @@ def _q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage))
     for i in (0, 1):
         bdir = _os.path.join(stage, f"__b={i}")
+        if not _os.path.isdir(bdir):
+            # partitionBy makes no directory for an empty side; its batch
+            # still lands, as one schema-only parquet file
+            docs.limit(0).coalesce(1).write.parquet(bdir)
         part = next(f for f in sorted(_os.listdir(bdir))
                     if f.endswith(".parquet"))
         dst = _os.path.join(landing, f"batch-{i:03d}.parquet")
@@ -15290,9 +15296,11 @@ def _q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         found.crossJoin(n44).crossJoin(n82)
         .select(
             "n_true", "n_found_4x4", "n_found_8x2",
-            F.round(F.col("n_found_4x4") / F.col("n_true"), 6)
+            # try_divide: no true pairs (an empty corpus) reads NULL
+            # recall, as DuckDB's division by zero does
+            F.round(F.try_divide("n_found_4x4", "n_true"), 6)
             .alias("recall_4x4"),
-            F.round(F.col("n_found_8x2") / F.col("n_true"), 6)
+            F.round(F.try_divide("n_found_8x2", "n_true"), 6)
             .alias("recall_8x2"),
             "n_cand_4x4", "n_cand_8x2",
         )
@@ -15361,14 +15369,14 @@ c82 as (
    and x.doc_id < y.doc_id),
 agg as (
   select count(*)::bigint as n_true,
-         sum(case when exists (select 1 from c44
-                               where c44.id_a = truth.id_a
-                                 and c44.id_b = truth.id_b)
-              then 1 else 0 end)::bigint as n_found_4x4,
-         sum(case when exists (select 1 from c82
-                               where c82.id_a = truth.id_a
-                                 and c82.id_b = truth.id_b)
-              then 1 else 0 end)::bigint as n_found_8x2
+         count(*) filter (where exists (select 1 from c44
+                                        where c44.id_a = truth.id_a
+                                          and c44.id_b = truth.id_b))
+             as n_found_4x4,
+         count(*) filter (where exists (select 1 from c82
+                                        where c82.id_a = truth.id_a
+                                          and c82.id_b = truth.id_b))
+             as n_found_8x2
   from truth)
 select n_true, n_found_4x4, n_found_8x2,
        round(n_found_4x4 / n_true::double, 6) as recall_4x4,

@@ -5,9 +5,14 @@ detect what they claim to detect (recall on known duplicates)."""
 
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
-from restaurant_etl_code_spark.operators import dedup, similarity
+from restaurant_etl_code_spark.operators import chunking, dedup, similarity
+from tests.conftest import SF0001
 
 
 def _docs(spark):
@@ -242,3 +247,94 @@ def test_near_dup_auto_nbits_scales_buckets_with_corpus(spark):
         if r["id_b"] - r["id_a"] == 100000
     }
     assert base_scaled and base_scaled <= auto
+
+
+def _sig(d):
+    return dedup.minhash_signatures(d, "doc_id", "text")
+
+
+# Every entry that runs through the shared Arrow text stage, band join,
+# heavy-key valve or pair count, plus the exact (nbits=0) near-dup path.
+_EMPTY_IN_CASES = {
+    "minhash_signatures": _sig,
+    "simhash": lambda d: dedup.simhash(d, "doc_id", "text"),
+    "shingle_rows": lambda d: dedup.shingle_rows(d, "doc_id", "text"),
+    "winnow_fingerprints": lambda d: dedup.winnow_fingerprints(d),
+    "lsh_candidate_pairs": lambda d: dedup.lsh_candidate_pairs(_sig(d)),
+    "minhash_estimate_pairs": lambda d: dedup.minhash_estimate_pairs(_sig(d)),
+    "incremental_lsh_pairs": lambda d: dedup.incremental_lsh_pairs(
+        _sig(d), _sig(d.withColumn("doc_id", F.col("doc_id") + 10))),
+    "minhash_fuzzy_join": lambda d: dedup.minhash_fuzzy_join(
+        d, d, max_band_freq=1),
+    "ngram_jaccard_pairs": lambda d: dedup.ngram_jaccard_pairs(
+        d, "doc_id", "text"),
+    "containment_pairs": lambda d: dedup.containment_pairs(
+        d, "doc_id", "text", max_df=1),
+    "winnow_pairs": lambda d: dedup.winnow_pairs(d, min_shared=1, max_df=1),
+    "cdc_containment_pairs": lambda d: chunking.cdc_containment_pairs(
+        d, max_df=1),
+    "embedding_near_dup_pairs_nbits0": lambda d: (
+        similarity.embedding_near_dup_pairs(
+            d.select(
+                F.col("doc_id").alias("vec_id"),
+                F.array(F.length("text").cast("double"), F.lit(1.0))
+                .alias("embedding"),
+            ),
+            threshold=0.5, nbits=0,
+        )
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_EMPTY_IN_CASES))
+def test_entry_on_empty_input_returns_typed_empty_frame(spark, entry):
+    """Empty in, typed empty out: every Arrow batch of a ``limit(0)`` input
+    is empty, so the shared stage must skip it, and nothing downstream may
+    raise (the exact near-dup path used to hit numpy ``AxisError``)."""
+    docs = _docs(spark)
+    build = _EMPTY_IN_CASES[entry]
+    empty = build(docs.limit(0))
+    assert empty.schema == build(docs).schema
+    assert empty.collect() == []
+
+
+# The queries that crashed or disagreed with DuckDB on all-empty tables,
+# with the sf0.001 tables they read.
+_EMPTY_TABLE_QUERIES = {
+    "dedup_clusters": ("embeddings",),
+    "dedup_recall": ("embeddings",),
+    "embedding_near_dup": ("embeddings",),
+    "minhash_recall": ("documents",),
+    "streaming_neardup": ("documents",),
+    "zorder_scan": ("events",),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EMPTY_TABLE_QUERIES))
+def test_query_on_empty_tables_matches_oracle(spark, tmp_path, name):
+    """A registered query over schema-only copies of its tables must give
+    the DuckDB oracle's answer (compared as the driver hash check
+    canonicalizes), not a crash."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    spec = importlib.util.spec_from_file_location(
+        "driver_hash_check",
+        Path(__file__).resolve().parents[1] / "tools" / "driver_hash_check.py",
+    )
+    hash_check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(hash_check)
+
+    con = duckdb.connect()
+    for t in _EMPTY_TABLE_QUERIES[name]:
+        path = tmp_path / f"{t}.parquet"
+        pq.write_table(pq.read_schema(f"{SF0001}/{t}.parquet").empty_table(), path)
+        con.execute(f"create view {t} as select * from read_parquet('{path}')")
+    try:
+        got = entry.queries()[name](spark, str(tmp_path)).toPandas()
+    finally:
+        spark.catalog.clearCache()
+    want = con.execute(entry.oracle_sql()[name]).df()
+    assert hash_check.canon(got) == hash_check.canon(want)
