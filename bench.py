@@ -30,7 +30,10 @@ quiet takes (load only ever adds time), a quiet retake clears the
 row's contamination flag, and every retake is audited per-row in
 `retaken_queries`. This makes the committed record a min-of-takes
 artifact for exactly the rows where one instant's box state would
-otherwise become the round's reference number.
+otherwise become the round's reference number. Retake provenance is
+promoted to the summary (`retake_replaced_rows`,
+`retake_replaced_loaded_rows`) so anchor comparisons can exclude
+warmth-advantaged min-of-takes rows without walking the audit.
 
 Per-row quiet markers (r16, verdict order 3): every detail row carries
 the KEPT take's bracket (`kept_bracket_ms` / `kept_io_bracket_ms`) and
@@ -41,20 +44,6 @@ its quiet retake was slower (r15 committed four such rows under
 `quiet: true`); with the kept-take bracket in-record, those rows are
 machine-separable and a reader can recompute the geomean over clean
 rows only — at the 2.5x cutoff or any stricter threshold they trust.
-
-Stateful-streaming absolute gate (r17, r16 verdict order 1a): rows in
-`STREAMING_ROWS` additionally require their kept bracket AT the box's
-floor (`kept_bracket_ms <= STREAMING_BRACKET_RATIO x nominal`) to
-claim `quiet_row` — micro-batch scheduling amplifies moderate CPU load
-(canaries 1.2-2.5x nominal, inside the relative cutoff) into 2.5-3x
-wall for exactly these rows (r16: stream_stream_join 3.5 s at the
-105 ms floor vs 9.0-10.9 s at 121-192 ms canaries, the whole family
-moving 1.66-2.35x together on unchanged plans). Gate-failed streaming
-rows are retaken up to `STREAMING_RETAKE_ATTEMPTS` times and otherwise
-land `streaming_elevated: true` / `quiet_row: false`. Retake
-provenance is promoted to the summary (`retake_replaced_rows`,
-`retake_replaced_loaded_rows`) so anchor comparisons can exclude
-warmth-advantaged min-of-takes rows without walking the audit.
 """
 
 from __future__ import annotations
@@ -442,13 +431,8 @@ DRIFT_MIN_SEC = 0.2  # ratios of sub-noise rows are meaningless
 # compares only to the PREVIOUS record, so a slow-creep sequence of ≤1.2
 # records compounds invisibly — two more 1.16 records in a row would pass
 # every per-round gate while quietly costing 35%. A second geomean against
-# a FIXED old clean record (r09: the last fully quiet-floor record) alarms
-# on the CUMULATIVE factor regardless of the record-to-record number. The
-# anchor is a committed artifact, never rewritten; bump the env var only
-# when a later record is deliberately promoted to anchor (document why).
-DRIFT_ANCHOR_RECORD = os.environ.get(
-    "SPARK_GRAFT_DRIFT_ANCHOR", "BENCH_full_r09.json"
-)
+# a FIXED old clean record alarms on the CUMULATIVE factor regardless of
+# the record-to-record number.
 DRIFT_ANCHOR_RATIO = 1.35
 
 # Measurement-protocol versioning (r16, r15 verdict order 1). The r15
@@ -466,15 +450,11 @@ DRIFT_ANCHOR_RATIO = 1.35
 # records only:
 #   v1 = pre-r15 (no per-row clearCache — cross-row subsidy possible)
 #   v2 = r15+   (per-row clearCache + WARMUP_ROWS + retake pass)
-# The gate anchor is the first committed quiet v2 record
-# (BENCH_full_r15.json); the r09 v1 anchor stays in the record as
-# `geomean_vs_anchor_legacy` — informational cross-protocol context,
-# never a quiet-flag input. Bump the v2 default only when a later
-# quiet record is deliberately promoted (document why in BASELINE.md).
+# The gate anchor is the first committed quiet v2 record, a committed
+# artifact that is never rewritten. Promote a later quiet record only
+# deliberately, and document why in BASELINE.md.
 PROTOCOL_VERSION = 2
-DRIFT_ANCHOR_RECORD_V2 = os.environ.get(
-    "SPARK_GRAFT_DRIFT_ANCHOR_V2", "BENCH_full_r15.json"
-)
+DRIFT_ANCHOR_RECORD_V2 = "BENCH_full_r15.json"
 
 
 def drift_vs_prev(timings: dict, prev_record: dict) -> dict:
@@ -518,43 +498,6 @@ def drift_vs_anchor(timings: dict, anchor_record: dict) -> dict:
 # canary ⇒ the query's window was externally loaded (2.5x leaves
 # headroom for GC jitter; the r8 spike inflated rows 4-33x, far past it)
 CANARY_CONTAMINATION_RATIO = 2.5
-
-# ------------------------------------------------------------------
-# Stateful-streaming rows: ABSOLUTE bracket gate (r17, r16 verdict
-# order 1a). The relative 2.5x-of-best cutoff is calibrated for batch
-# rows, where external load adds roughly its CPU share to the row's
-# wall time. Micro-batch streaming rows are different in kind: each
-# micro-batch is a scheduling round-trip, so a moderate CPU plateau
-# (canaries at a mere 1.3-1.8x the box nominal — far inside the 2.5x
-# relative cutoff) AMPLIFIES into 2.5-3x wall through added per-batch
-# waits (measured r16: stream_stream_join 3.5 s at the 105 ms floor
-# vs 9.0-10.9 s at 121-192 ms canaries — the whole streaming family
-# moved together, 1.66-2.35x, on byte-identical plans). A streaming
-# row therefore only claims `quiet_row` when its kept bracket is AT
-# the box's floor: bracket <= STREAMING_BRACKET_RATIO x the nominal.
-# Rows failing the gate are retaken (several attempts — the gate is
-# strict, windows are short) and, if still elevated, land with
-# `quiet_row: false` + `streaming_elevated: true` so no reader can
-# mistake an amplified take for the plan's cost.
-STREAMING_BRACKET_RATIO = float(
-    os.environ.get("SPARK_GRAFT_STREAMING_BRACKET_RATIO", "1.2")
-)
-STREAMING_RETAKE_ATTEMPTS = int(
-    os.environ.get("SPARK_GRAFT_STREAMING_RETAKE_ATTEMPTS", "3")
-)
-# every bench row that drives Structured Streaming machinery
-# (micro-batch scheduling in the timed window) — the amplification
-# mechanism above applies to all of them, not just the r16 movers
-STREAMING_ROWS = set(
-    os.environ.get(
-        "SPARK_GRAFT_STREAMING_ROWS",
-        "streaming_window,streaming_dedup,streaming_enrich,"
-        "stream_stream_join,streaming_dedup_watermark,"
-        "streaming_quality_gate,streaming_funnel,"
-        "stream_stream_left_join,streaming_curation,"
-        "streaming_neardup,streaming_warc_curation",
-    ).split(",")
-)
 
 # ------------------------------------------------------------------
 # Quiet-retake pass (r13 verdict orders 1 + 7). The one-shot protocol
@@ -636,12 +579,15 @@ def merge_retakes(timings: dict, contaminated: list,
     return merged, sorted(still), audit
 
 
+def _is_quiet(bracket: float, io_bracket: float, cutoff: float,
+              io_cutoff: "float | None") -> bool:
+    return bracket <= cutoff and (io_cutoff is None or io_bracket <= io_cutoff)
+
+
 def kept_bracket_and_quiet(names: list, canaries_ms: list,
                            io_canaries_ms: list, cutoff: float,
                            io_cutoff: "float | None",
-                           retake_audit: dict,
-                           streaming_rows: "set | None" = None,
-                           streaming_gate_ms: "float | None" = None) -> dict:
+                           retake_audit: dict) -> dict:
     """Per-row quiet marker (r15 verdict order 3): for each row, the
     KEPT take's bracketing canary maxima and ``quiet_row`` = that
     bracket ≤ the session cutoffs. The session-level ``quiet`` flag
@@ -657,16 +603,8 @@ def kept_bracket_and_quiet(names: list, canaries_ms: list,
     bracket and its quiet flag (min-of-takes admits loaded-but-faster
     retakes as timing upper bounds — their quiet_row stays False);
     rows that kept a first take — retaken or not — carry the first
-    take's bracket.
-
-    Stateful-streaming rows (r17, r16 verdict order 1a) additionally
-    require ``kept_bracket_ms <= streaming_gate_ms`` — an ABSOLUTE
-    floor gate, because micro-batch scheduling amplifies moderate CPU
-    load (inside the relative cutoff) into 2.5-3x wall for these rows
-    and ONLY these rows. A streaming row failing the gate carries
-    ``streaming_elevated: true`` and can never be ``quiet_row``."""
+    take's bracket."""
     out: dict[str, dict] = {}
-    streaming_rows = streaming_rows or set()
     for i, name in enumerate(names):
         rt = retake_audit.get(name)
         if rt is not None and rt.get("kept") == "retake":
@@ -676,26 +614,20 @@ def kept_bracket_and_quiet(names: list, canaries_ms: list,
         else:
             bracket = max(canaries_ms[i], canaries_ms[i + 1])
             io_bracket = max(io_canaries_ms[i], io_canaries_ms[i + 1])
-            quiet_row = bracket <= cutoff and (
-                io_cutoff is None or io_bracket <= io_cutoff)
-        row = {
+            quiet_row = _is_quiet(bracket, io_bracket, cutoff, io_cutoff)
+        out[name] = {
             "kept_bracket_ms": round(bracket, 1),
             "kept_io_bracket_ms": round(io_bracket, 2),
             "quiet_row": quiet_row,
         }
-        if name in streaming_rows and streaming_gate_ms is not None:
-            elevated = not (0 <= bracket <= streaming_gate_ms)
-            row["streaming_elevated"] = elevated
-            if elevated:
-                row["quiet_row"] = False
-        out[name] = row
     return out
+
 
 # ABSOLUTE floor (review finding): a purely relative check misses load
 # that is uniform across the WHOLE run — every canary inflates together
 # and none exceeds 2.5x "best". The default below measured 102-108 ms on
-# THIS box verifiably unloaded (loadavg 0.06, committed in
-# BENCH_full_r09.json); a best-canary beyond 1.6x that nominal means
+# THIS box verifiably unloaded (loadavg 0.06, in the r09 record, now in
+# git history); a best-canary beyond 1.6x that nominal means
 # the entire session ran loaded and the record must say quiet:false
 # even with an empty per-query list. The nominal is BOX-SPECIFIC
 # (advisor r9): on any other host set SPARK_GRAFT_CANARY_NOMINAL_MS to
@@ -712,7 +644,7 @@ CANARY_UNIFORM_LOAD_RATIO = 1.6
 # page-cache eviction) shows as tens-of-ms reads, so the I/O flag also
 # requires an ABSOLUTE floor: a sample must exceed BOTH 2.5x the session
 # best AND this floor to mark a query contaminated.
-IO_CANARY_FLOOR_MS = float(os.environ.get("SPARK_GRAFT_IO_CANARY_FLOOR_MS", "25.0"))
+IO_CANARY_FLOOR_MS = 25.0
 
 
 # Warm-up protocol (r14 verdict order 5): a few rows are RAMP-dominated —
@@ -721,12 +653,11 @@ IO_CANARY_FLOOR_MS = float(os.environ.get("SPARK_GRAFT_IO_CANARY_FLOOR_MS", "25.
 # a git-verified byte-identical plan). For these rows one UNTIMED
 # execution runs before the timed take, so the committed series stops
 # being a random point on the ramp and measures the plan's steady state.
-# The applied set is audited in the record (`warmup_rows`); extend via
-# env for A/Bs on other hosts. r18 (verdict r17 order 1): the warm-up
-# take is followed by clearCache() BEFORE the timed take — Spark's
-# CacheManager matches canonicalized plans, so for a row whose plan
-# contains .persist() the timed take would otherwise read the
-# InMemoryRelation blocks populated by the untimed warm-up (a cache
+# The applied set is audited in the record (`warmup_rows`). r18 (verdict
+# r17 order 1): the warm-up take is followed by clearCache() BEFORE the
+# timed take — Spark's CacheManager matches canonicalized plans, so for a
+# row whose plan contains .persist() the timed take would otherwise read
+# the InMemoryRelation blocks populated by the untimed warm-up (a cache
 # subsidy, not JIT warmth). The warm-up now buys codegen/JIT/page-cache
 # ramp ONLY; every timed take computes cache-cold from parquet.
 # Standing inclusion criterion (r17 ADVICE item 2, pre-registered for
@@ -740,29 +671,51 @@ IO_CANARY_FLOOR_MS = float(os.environ.get("SPARK_GRAFT_IO_CANARY_FLOOR_MS", "25.
 # dedup_recall pathology. dup_cluster_sizes showed NO ramp trend in the
 # same audit (5.5, 7.3, 4.7, 6.0, 6.6, 7.9 — jitter, no descent) and
 # stays un-warmed; its series is governed by the v2 anchor.
-WARMUP_ROWS = set(
-    os.environ.get(
-        "SPARK_GRAFT_WARMUP_ROWS",
-        "dedup_recall,warc_fetch_latency,cdx_incremental_merge,"
-        "winnow_dedup_pairs,change_rate_schedule,containment_pairs,"
-        # r17 ramp audits (BASELINE.md "Round-17 ramp audits"): committed
-        # rows read >=1.7x their quiet warm steady state on unchanged
-        # plans — first-execution codegen/shuffle ramp, the
-        # containment_pairs precedent. basket_triple_rules audited too
-        # (1.5x) and deliberately NOT moved.
-        "pagerank,basket_triples,basket_rules",
-    ).split(",")
-)
+WARMUP_ROWS = {
+    "dedup_recall", "warc_fetch_latency", "cdx_incremental_merge",
+    "winnow_dedup_pairs", "change_rate_schedule", "containment_pairs",
+    # r17 ramp audits (BASELINE.md "Round-17 ramp audits"): committed
+    # rows read >=1.7x their quiet warm steady state on unchanged
+    # plans — first-execution codegen/shuffle ramp, the
+    # containment_pairs precedent. basket_triple_rules audited too
+    # (1.5x) and deliberately NOT moved.
+    "pagerank", "basket_triples", "basket_rules",
+}
+
+
+def _sample(io_probe: "str | None") -> tuple[float, float]:
+    """One bracket sample: (CPU canary ms, I/O canary ms or -1)."""
+    return (round(_canary_sec() * 1000, 1),
+            round(_io_canary_sec(io_probe) * 1000, 2) if io_probe else -1.0)
+
+
+def _take(spark, name: str, sf_dir: str) -> tuple[float, int]:
+    """One timed take of ``name``: (seconds, rows). Plan building is
+    inside the clock, as the registry's callers pay it."""
+    qd = QUERIES[name]
+    if name in WARMUP_ROWS:
+        qd.spark(spark, sf_dir).count()  # untimed ramp eater (audited)
+        # kill the warm-up's persisted blocks so the timed take is
+        # cache-cold (keeps JIT warmth, removes the block subsidy)
+        spark.catalog.clearCache()
+    t0 = time.time()
+    n = qd.spark(spark, sf_dir).count()
+    sec = round(time.time() - t0, 3)
+    # release this row's persisted blocks (winnow/persist-once rows
+    # cache intra-query scans): across a 250-query session leftover
+    # blocks evict each other and pressure executor storage, skewing
+    # later rows — the persist-once benefit is WITHIN a row's
+    # execution (and its warm-up take), never across rows.
+    spark.catalog.clearCache()
+    return sec, n
 
 
 def main() -> int:
+    repo_dir = os.path.dirname(os.path.abspath(__file__))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_full_latest.json"),
-    )
+        "SPARK_GRAFT_BENCH_OUT", os.path.join(repo_dir, "BENCH_full_latest.json"))
     spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     # warm the JVM + parquet footers with a trivial action
@@ -772,173 +725,84 @@ def main() -> int:
     detail: dict[str, dict] = {}
     # canaries BRACKET each query (review finding: a pre-only sample
     # misses load arriving mid-query and leaves the last query's window
-    # entirely unguarded): canaries[i] runs before query i, and one
+    # entirely unguarded): samples[i] runs before query i, and one
     # final sample closes the last bracket — query i is flagged if
     # EITHER end of its bracket saw load.
     io_probe = _pick_io_probe_file(sf_dir)
     if io_probe:
         _io_canary_sec(io_probe)  # prime the page cache: sample 0 is hot too
-    canaries_ms: list[float] = []
-    io_canaries_ms: list[float] = []
+    samples: list[tuple[float, float]] = []
     for name in BENCH_QUERIES:
-        qd = QUERIES[name]
         load1 = _load1()
-        canary = _canary_sec()
-        canaries_ms.append(round(canary * 1000, 1))
-        io_canaries_ms.append(
-            round(_io_canary_sec(io_probe) * 1000, 2) if io_probe else -1.0
-        )
-        if name in WARMUP_ROWS:
-            qd.spark(spark, sf_dir).count()  # untimed ramp eater (audited)
-            # kill the warm-up's persisted blocks so the timed take is
-            # cache-cold (keeps JIT warmth, removes the block subsidy)
-            spark.catalog.clearCache()
-        t0 = time.time()
-        df = qd.spark(spark, sf_dir)
-        n = df.count()
-        timings[name] = round(time.time() - t0, 3)
-        # release this row's persisted blocks (winnow/persist-once rows
-        # cache intra-query scans): across a 250-query session leftover
-        # blocks evict each other and pressure executor storage, skewing
-        # later rows — the persist-once benefit is WITHIN a row's
-        # execution (and its warm-up take), never across rows.
-        spark.catalog.clearCache()
+        samples.append(_sample(io_probe))
+        timings[name], n = _take(spark, name, sf_dir)
         detail[name] = {
             "sec": timings[name],
             "rows": n,
             "load1": load1,
-            "canary_ms": canaries_ms[-1],
-            "io_canary_ms": io_canaries_ms[-1],
+            "canary_ms": samples[-1][0],
+            "io_canary_ms": samples[-1][1],
             "warmed_up": name in WARMUP_ROWS,
         }
         print(
             f"# {name}: {timings[name]:.2f}s ({n} rows, load1={load1:.2f}, "
-            f"canary={canary * 1000:.0f}ms, io={io_canaries_ms[-1]:.1f}ms)",
+            f"canary={samples[-1][0]:.0f}ms, io={samples[-1][1]:.1f}ms)",
             file=sys.stderr,
         )
-    canaries_ms.append(round(_canary_sec() * 1000, 1))  # close last bracket
-    io_canaries_ms.append(
-        round(_io_canary_sec(io_probe) * 1000, 2) if io_probe else -1.0
-    )
-
-    best_canary = min(canaries_ms)
-    cutoff = CANARY_CONTAMINATION_RATIO * best_canary
-    contaminated = set(
-        name for i, name in enumerate(BENCH_QUERIES)
-        if canaries_ms[i] > cutoff or canaries_ms[i + 1] > cutoff
-    )
-    # I/O-side bracket (page-cache-hot fixed read): flags interference
-    # the CPU loop cannot see — storage/memory-path contention
-    if io_probe:
-        io_best = min(io_canaries_ms)
-        io_cutoff = max(CANARY_CONTAMINATION_RATIO * io_best, IO_CANARY_FLOOR_MS)
-        contaminated |= set(
-            name for i, name in enumerate(BENCH_QUERIES)
-            if io_canaries_ms[i] > io_cutoff or io_canaries_ms[i + 1] > io_cutoff
-        )
-    contaminated = sorted(contaminated)
+    samples.append(_sample(io_probe))  # close last bracket
+    canaries_ms = [c for c, _ in samples]
+    io_canaries_ms = [io for _, io in samples]
     for i, name in enumerate(BENCH_QUERIES):
         detail[name]["canary_after_ms"] = canaries_ms[i + 1]
         detail[name]["io_canary_after_ms"] = io_canaries_ms[i + 1]
+
+    best_canary = min(canaries_ms)
+    cutoff = CANARY_CONTAMINATION_RATIO * best_canary
+    # I/O-side bracket (page-cache-hot fixed read): flags interference
+    # the CPU loop cannot see — storage/memory-path contention
+    io_cutoff = (max(CANARY_CONTAMINATION_RATIO * min(io_canaries_ms),
+                     IO_CANARY_FLOOR_MS) if io_probe else None)
+    # a row is contaminated when either bracket of its first take is
+    # above a cutoff: the per-row marker with no retake yet
+    contaminated = sorted(
+        name for name, f in kept_bracket_and_quiet(
+            BENCH_QUERIES, canaries_ms, io_canaries_ms, cutoff, io_cutoff,
+            {}).items()
+        if not f["quiet_row"])
     # uniform-load floor: if even the BEST canary is far above the
     # box's verified-unloaded nominal, the whole session ran loaded
     uniform_load = best_canary > CANARY_NOMINAL_MS * CANARY_UNIFORM_LOAD_RATIO
 
     # committed references, loaded BEFORE the retake pass so movers vs
     # either can be re-taken (r13 verdict orders 1 + 7)
-    prev = _prev_committed_record(
-        os.path.dirname(os.path.abspath(__file__)), out_path
-    )
+    prev = _prev_committed_record(repo_dir, out_path)
     prev_rec = prev[1] if prev is not None and prev[1].get("sf") == sf else None
-
-    def _load_ref(path: str) -> "dict | None":
-        if os.path.realpath(path) == os.path.realpath(out_path):
-            return None
-        try:
-            cand = json.load(open(path))
-            return cand if cand.get("sf") == sf else None
-        except (OSError, json.JSONDecodeError):
-            return None
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    # HARD cumulative gate: the same-protocol (v2) anchor. The v1/r09
-    # anchor is loaded for the informational cross-protocol number only.
+    # HARD cumulative gate: the same-protocol (v2) anchor
     anchor_path = os.path.join(repo_dir, DRIFT_ANCHOR_RECORD_V2)
-    anchor_rec = _load_ref(anchor_path)
-    legacy_path = os.path.join(repo_dir, DRIFT_ANCHOR_RECORD)
-    legacy_rec = _load_ref(legacy_path)
-
-    # stateful-streaming absolute gate (r17, r16 verdict order 1a): a
-    # streaming row whose first-take bracket is above the FLOOR gate is
-    # retake-eligible even when inside the relative cutoff — micro-batch
-    # scheduling amplifies exactly that band (1.2-2.5x nominal) into
-    # 2.5-3x wall for these rows
-    streaming_gate_ms = round(STREAMING_BRACKET_RATIO * CANARY_NOMINAL_MS, 1)
-    streaming_gate_failed = set(
-        name for i, name in enumerate(BENCH_QUERIES)
-        if name in STREAMING_ROWS
-        and max(canaries_ms[i], canaries_ms[i + 1]) > streaming_gate_ms
-    )
+    anchor_rec = None
+    if os.path.realpath(anchor_path) != os.path.realpath(out_path):
+        try:
+            anchor_rec = json.load(open(anchor_path))
+        except (OSError, json.JSONDecodeError):
+            pass
+    if anchor_rec is not None and anchor_rec.get("sf") != sf:
+        anchor_rec = None
 
     # quiet-retake pass: one bracketed re-run per contaminated/mover
-    # row (several attempts for gate-failed streaming rows); recorded
-    # row = min of the quiet takes (see retake_set)
-    retake_names = retake_set(
-        timings, sorted(set(contaminated) | streaming_gate_failed),
-        (prev_rec or {}).get("queries", {}),
-        (anchor_rec or {}).get("queries", {}),
-    )
+    # row; recorded row = min of the quiet takes (see retake_set)
     retakes: dict[str, dict] = {}
-    io_cutoff = (max(CANARY_CONTAMINATION_RATIO * min(io_canaries_ms),
-                     IO_CANARY_FLOOR_MS) if io_probe else None)
-    for name in retake_names:
-        is_streaming = name in STREAMING_ROWS
-        attempts = STREAMING_RETAKE_ATTEMPTS if is_streaming else 1
-        best: dict | None = None
-        for attempt in range(attempts):
-            if attempt > 0:
-                time.sleep(2.0)  # let a transient load window pass
-            pre_c = _canary_sec() * 1000
-            pre_io = _io_canary_sec(io_probe) * 1000 if io_probe else 0.0
-            if name in WARMUP_ROWS:
-                QUERIES[name].spark(spark, sf_dir).count()  # same state as take 1
-                spark.catalog.clearCache()  # cache-cold timed take, as in main pass
-            t0 = time.time()
-            df = QUERIES[name].spark(spark, sf_dir)
-            df.count()
-            sec = round(time.time() - t0, 3)
-            spark.catalog.clearCache()  # same per-row hygiene as the main pass
-            post_c = _canary_sec() * 1000
-            post_io = _io_canary_sec(io_probe) * 1000 if io_probe else 0.0
-            bracket = max(pre_c, post_c)
-            quiet_take = bracket <= cutoff and (
-                io_cutoff is None or max(pre_io, post_io) <= io_cutoff)
-            if is_streaming:
-                # streaming retakes must be at the FLOOR to claim quiet
-                quiet_take = quiet_take and bracket <= streaming_gate_ms
-            cand = {
-                "sec": sec, "quiet": quiet_take,
-                "bracket_ms": round(bracket, 1),
-                "io_bracket_ms": round(max(pre_io, post_io), 2),
-            }
-            # prefer quiet takes; among quiet, min sec; among loaded,
-            # min bracket (closest to a clean window)
-            if (best is None
-                    or (cand["quiet"] and not best["quiet"])
-                    or (cand["quiet"] == best["quiet"]
-                        and (cand["sec"] < best["sec"] if cand["quiet"]
-                             else cand["bracket_ms"] < best["bracket_ms"]))):
-                best = cand
-            print(
-                f"# retake {name}"
-                + (f" [{attempt + 1}/{attempts}]" if attempts > 1 else "")
-                + f": {sec:.2f}s (first {timings[name]:.2f}s, "
-                f"quiet={quiet_take}, canary={bracket:.0f}ms)",
-                file=sys.stderr,
-            )
-            if quiet_take:
-                break  # a floor-bracket take: no further attempts needed
-        retakes[name] = best
+    for name in retake_set(timings, contaminated,
+                           (prev_rec or {}).get("queries", {}),
+                           (anchor_rec or {}).get("queries", {})):
+        pre = _sample(io_probe)
+        sec, _ = _take(spark, name, sf_dir)
+        post = _sample(io_probe)
+        bracket, io_bracket = max(pre[0], post[0]), max(pre[1], post[1])
+        quiet = _is_quiet(bracket, io_bracket, cutoff, io_cutoff)
+        retakes[name] = {"sec": sec, "quiet": quiet, "bracket_ms": bracket,
+                         "io_bracket_ms": io_bracket}
+        print(f"# retake {name}: {sec:.2f}s (first {timings[name]:.2f}s, "
+              f"quiet={quiet}, canary={bracket:.0f}ms)", file=sys.stderr)
     timings, contaminated, retake_audit = merge_retakes(
         timings, contaminated, retakes)
     for name, row in retake_audit.items():
@@ -950,13 +814,10 @@ def main() -> int:
     # recompute the geomean over clean rows only
     row_flags = kept_bracket_and_quiet(
         BENCH_QUERIES, canaries_ms, io_canaries_ms, cutoff, io_cutoff,
-        retake_audit, streaming_rows=STREAMING_ROWS,
-        streaming_gate_ms=streaming_gate_ms)
+        retake_audit)
     for name, flags in row_flags.items():
         detail[name].update(flags)
     n_quiet_rows = sum(1 for f in row_flags.values() if f["quiet_row"])
-    streaming_elevated_rows = sorted(
-        n for n, f in row_flags.items() if f.get("streaming_elevated"))
     # retake provenance, promoted to the summary (r17 ADVICE): a row
     # whose RETAKE replaced the first take is a later execution in the
     # same JVM — JIT/shuffle warmth can make it faster independent of
@@ -987,17 +848,7 @@ def main() -> int:
               "anchor_suspect": False, "anchor_record": None}
     if anchor_rec is not None:
         anchor = drift_vs_anchor(timings, anchor_rec)
-        anchor["anchor_record"] = os.path.basename(anchor_path)
-    # informational cross-protocol context vs the v1/r09 anchor: never
-    # a quiet-flag input, kept so the series' full history stays in
-    # every record
-    legacy = {"geomean_vs_anchor_legacy": None,
-              "n_common_anchor_legacy": 0, "legacy_anchor_record": None}
-    if legacy_rec is not None:
-        lg = drift_vs_prev(timings, legacy_rec)
-        legacy = {"geomean_vs_anchor_legacy": lg["geomean_vs_prev"],
-                  "n_common_anchor_legacy": lg["n_common"],
-                  "legacy_anchor_record": os.path.basename(legacy_path)}
+        anchor["anchor_record"] = DRIFT_ANCHOR_RECORD_V2
     record = {
         "metric": "total_bench_sec",
         "value": total,
@@ -1016,13 +867,9 @@ def main() -> int:
         "n_quiet_rows": n_quiet_rows,
         "n_rows": len(BENCH_QUERIES),
         "warmup_rows": sorted(WARMUP_ROWS & set(BENCH_QUERIES)),
-        "streaming_rows": sorted(STREAMING_ROWS & set(BENCH_QUERIES)),
-        "streaming_bracket_gate_ms": streaming_gate_ms,
-        "streaming_elevated_rows": streaming_elevated_rows,
         "protocol_version": PROTOCOL_VERSION,
         **drift,
         **anchor,
-        **legacy,
     }
     if anchor["anchor_suspect"]:
         # cumulative creep past the fixed anchor: hard alarm, independent

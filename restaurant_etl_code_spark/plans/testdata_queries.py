@@ -23,7 +23,10 @@ training-data corpus.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -904,6 +907,26 @@ from events group by 1, 2
 
 
 # --------------------------------------------------------------------------
+# Query temp directories: the streaming and landing queries stage their
+# landing, stage, target and checkpoint directories here.
+# --------------------------------------------------------------------------
+
+_temp_root: "str | None" = None
+
+
+def _temp_dir(prefix: str) -> str:
+    """A fresh directory under this process's one temp root, which is
+    removed at interpreter exit. Nothing goes earlier: the streams and
+    bucketed reads a query returns read these directories lazily, after
+    the query function has returned."""
+    global _temp_root
+    if _temp_root is None:
+        _temp_root = tempfile.mkdtemp(prefix="spark_graft_q_")
+        atexit.register(shutil.rmtree, _temp_root, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_temp_root)
+
+
+# --------------------------------------------------------------------------
 # Streaming twins run for real (SURVEY §2.8): the SAME logical queries as
 # their batch counterparts, executed through Structured Streaming
 # (file-arrival source → watermarked agg / stateful dedup → AvailableNow)
@@ -915,14 +938,13 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     """Streaming scan of the events table with the same TIMESTAMP(NANOS)
     normalization as the batch reader (sources/readers.py)."""
     import os as _os
-    import tempfile as _tempfile
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = _os.path.join(sf_dir, "events.parquet")
     # The file streaming source requires a DIRECTORY (it tails new arrivals);
     # the driver testdata is a single read-only file, so stage a landing dir
     # with a symlink — zero copy, testdata untouched.
-    landing = _tempfile.mkdtemp(prefix="landing_events_")
+    landing = _temp_dir("landing_events_")
     _os.symlink(path, _os.path.join(landing, "events-000.parquet"))
     raw = spark.read.parquet(path)
     stream = spark.readStream.schema(raw.schema).parquet(landing)
@@ -999,7 +1021,6 @@ def _run_stream(
     planning on the caller's session never observes the flip — conf
     mutation stays session-private.
     """
-    import tempfile
     import uuid
 
     from restaurant_etl_code_spark.streaming import run_available_now
@@ -1013,7 +1034,7 @@ def _run_stream(
             child.conf.set(k, v)
     name = "stream_q_" + uuid.uuid4().hex[:8]
     run_available_now(
-        build(child), tempfile.mkdtemp(prefix="ckpt_"), query_name=name,
+        build(child), _temp_dir("ckpt_"), query_name=name,
         output_mode=mode,
     )
     return child.table(name)
@@ -4891,10 +4912,9 @@ def _documents_stream(spark: SparkSession, sf_dir: str):
     """Streaming scan of the documents table (symlink landing dir — the
     file source needs a directory it can tail; testdata stays untouched)."""
     import os as _os
-    import tempfile as _tempfile
 
     path = _os.path.join(sf_dir, "documents.parquet")
-    landing = _tempfile.mkdtemp(prefix="landing_docs_")
+    landing = _temp_dir("landing_docs_")
     _os.symlink(path, _os.path.join(landing, "documents-000.parquet"))
     raw = spark.read.parquet(path)
     return spark.readStream.schema(raw.schema).parquet(landing)
@@ -6590,7 +6610,6 @@ def _q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered availableNow batches = two unrolled layers of relational
     algebra, so the oracle is exact."""
     import os as _os
-    import tempfile as _tempfile
 
     from restaurant_etl_code_spark.sources.sinks import read_bucketed
     from restaurant_etl_code_spark.streaming import curate_stream_near_dup
@@ -6601,11 +6620,11 @@ def _q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         str(_stream_state_partitions(spark, sf_dir, "documents")),
     )
     docs = _augmented_docs(child, sf_dir).select("doc_id", "text")
-    landing = _tempfile.mkdtemp(prefix="landing_neardup_")
+    landing = _temp_dir("landing_neardup_")
     # both ordered batch files come out of ONE write job (partitionBy on
     # the batch flag; coalesce(1) keeps one file per batch dir) instead
     # of two sequential coalesce(1) writes — same two files, same order
-    stage = _tempfile.mkdtemp(prefix="stage_nd_")
+    stage = _temp_dir("stage_nd_")
     (docs.withColumn("__b", (F.col("doc_id") >= 100000).cast("int"))
         .coalesce(1).write.mode("overwrite").partitionBy("__b")
         .parquet(stage))
@@ -6625,9 +6644,9 @@ def _q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    target = _tempfile.mkdtemp(prefix="neardup_") + "/t"
+    target = _temp_dir("neardup_") + "/t"
     curate_stream_near_dup(
-        stream, target, _tempfile.mkdtemp(prefix="ckpt_nd_"),
+        stream, target, _temp_dir("ckpt_nd_"),
         min_tokens=30, num_hashes=16, shingle_n=3, bands=4, rows_per_band=4,
         n_buckets=16,
     )
@@ -7403,7 +7422,6 @@ def _q_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     source makes the result ≡ batch dedup of the gated corpus, so the
     relational oracle is exact."""
     import os as _os
-    import tempfile as _tempfile
 
     from restaurant_etl_code_spark.sources.sinks import read_bucketed
     from restaurant_etl_code_spark.streaming import (
@@ -7416,7 +7434,7 @@ def _q_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         str(_stream_state_partitions(spark, sf_dir, "documents")),
     )
     path = _os.path.join(sf_dir, "documents.parquet")
-    landing = _tempfile.mkdtemp(prefix="landing_docs_")
+    landing = _temp_dir("landing_docs_")
     if _os.path.isdir(path):  # Spark-written table dir: stage its part files
         for i, f in enumerate(sorted(_os.listdir(path))):
             if f.endswith(".parquet"):
@@ -7428,11 +7446,11 @@ def _q_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.symlink(path, _os.path.join(landing, "documents-000.parquet"))
     raw = child.read.parquet(path)
     stream = child.readStream.schema(raw.schema).parquet(landing)
-    target = _tempfile.mkdtemp(prefix="curated_") + "/t"
+    target = _temp_dir("curated_") + "/t"
     curate_stream_to_merge_target(
         stream.select("doc_id", "text"),
         target,
-        _tempfile.mkdtemp(prefix="ckpt_"),
+        _temp_dir("ckpt_"),
         min_tokens=30,
         n_buckets=16,
     )

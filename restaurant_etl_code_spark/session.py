@@ -14,6 +14,17 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "DEFAULT_CONF"]
 
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g. 16g gives 32 task slots
+    about 0.3g of execution memory each after the storage and reserved
+    fractions; the other half of a smaller machine stays for the Python
+    workers, the page cache and off-heap buffers, so the heap is pressed
+    to collect before the kernel runs out of memory."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, total // 2 >> 20)}m"
+
+
 # Confs chosen for 100 TB-scale behavior, not just local runs:
 #  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
 #    and join-strategy demotion to broadcast when the built side turns out
@@ -33,10 +44,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": "auto-set-below",
     "spark.ui.enabled": "false",
     # local mode: driver JVM == the one executor, so the heap serves every
-    # concurrent task (32 on this box) — 16g ≈ 0.3g execution memory per
-    # task slot after storage/reserved fractions, enough for spill-based
-    # operators to stage their buffers without GC thrash
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # concurrent task slot; see _default_driver_memory
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
 }
 
 

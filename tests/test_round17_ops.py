@@ -1,5 +1,4 @@
-"""Round-17 tests: streaming absolute bracket gate, retake
-provenance, line-key collision hardening, LSH geometry wiring,
+"""Round-17 tests: line-key collision hardening, LSH geometry wiring,
 calibration summary scalars, BPE-unit vocab coverage.
 
 Reference parity notes live in the operator docstrings; these tests
@@ -8,85 +7,10 @@ pin the r16 verdict orders 1-4/6-7 and the r17 ADVICE items.
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-# ---------------- streaming absolute bracket gate (r16 verdict order 1a)
-
-def test_streaming_gate_blocks_amplified_row():
-    import bench
-    # the exact r16 signature: a streaming row bracketed at 134 ms —
-    # well inside the relative 2.5x cutoff (262.5 ms) — but above the
-    # absolute floor gate (1.2 x 105 = 126 ms). Micro-batch scheduling
-    # amplifies that band 2.5-3x; the row must NOT read quiet.
-    names = ["batch_row", "stream_stream_join"]
-    canaries = [105.0, 134.0, 120.0]
-    ios = [-1.0, -1.0, -1.0]
-    cutoff = 2.5 * 105.0
-    flags = bench.kept_bracket_and_quiet(
-        names, canaries, ios, cutoff, None, {},
-        streaming_rows={"stream_stream_join"}, streaming_gate_ms=126.0)
-    # a batch row with the same bracket is fine under the relative cutoff
-    assert flags["batch_row"]["quiet_row"] is True
-    assert "streaming_elevated" not in flags["batch_row"]
-    # the streaming row is bracket-elevated: never quiet
-    assert flags["stream_stream_join"]["quiet_row"] is False
-    assert flags["stream_stream_join"]["streaming_elevated"] is True
-    assert flags["stream_stream_join"]["kept_bracket_ms"] == 134.0
-
-
-def test_streaming_gate_floor_bracket_row_is_quiet():
-    import bench
-    names = ["stream_stream_join"]
-    canaries = [108.0, 112.0]
-    ios = [-1.0, -1.0]
-    flags = bench.kept_bracket_and_quiet(
-        names, canaries, ios, 2.5 * 105.0, None, {},
-        streaming_rows={"stream_stream_join"}, streaming_gate_ms=126.0)
-    assert flags["stream_stream_join"]["quiet_row"] is True
-    assert flags["stream_stream_join"]["streaming_elevated"] is False
-
-
-def test_streaming_gate_applies_to_kept_retake_bracket():
-    import bench
-    # the kept take is the RETAKE: the gate reads the retake's bracket
-    audit = {
-        "streaming_enrich": {
-            "first_sec": 4.1, "retake_sec": 2.4, "retake_quiet": True,
-            "kept": "retake", "retake_bracket_ms": 109.0,
-            "retake_io_bracket_ms": -1.0},
-        "streaming_dedup_watermark": {
-            "first_sec": 5.0, "retake_sec": 3.1, "retake_quiet": False,
-            "kept": "retake", "retake_bracket_ms": 140.0,
-            "retake_io_bracket_ms": -1.0},
-    }
-    names = ["streaming_enrich", "streaming_dedup_watermark"]
-    canaries = [300.0, 310.0, 305.0]  # first takes all loaded
-    ios = [-1.0, -1.0, -1.0]
-    flags = bench.kept_bracket_and_quiet(
-        names, canaries, ios, 2.5 * 105.0, None, audit,
-        streaming_rows=set(names), streaming_gate_ms=126.0)
-    assert flags["streaming_enrich"]["quiet_row"] is True
-    assert flags["streaming_enrich"]["streaming_elevated"] is False
-    assert flags["streaming_dedup_watermark"]["quiet_row"] is False
-    assert flags["streaming_dedup_watermark"]["streaming_elevated"] is True
-
-
-def test_streaming_rows_cover_all_streaming_bench_rows():
-    import bench
-    # every bench row that drives micro-batch machinery is under the
-    # gate — the amplification mechanism is family-wide, not mover-wide
-    expected = {n for n in bench.BENCH_QUERIES
-                if n.startswith("stream") or "streaming" in n}
-    assert expected <= bench.STREAMING_ROWS
-    # and the gate sits at the floor: 1.2 x nominal by default
-    assert bench.STREAMING_BRACKET_RATIO == pytest.approx(1.2)
 
 
 # ---------------- line-key collision guard (r16 verdict order 3)

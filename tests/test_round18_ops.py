@@ -14,20 +14,23 @@ def test_bench_warmup_take_is_followed_by_clearcache():
     # r17 verdict order 1: the untimed warm-up take must not leave
     # persisted blocks for the timed take to read (CacheManager matches
     # canonicalized plans, so a .persist()-bearing row's timed take
-    # would otherwise be cache-subsidized). Pin: in BOTH the main pass
-    # and the retake loop, the WARMUP_ROWS count() is followed by a
-    # clearCache() BEFORE the timed-take clock starts.
+    # would otherwise be cache-subsidized). Pin: in `_take`, which both
+    # the main pass and the retake pass call, the WARMUP_ROWS count() is
+    # followed by a clearCache() BEFORE the timed-take clock starts.
     import bench
 
-    src = inspect.getsource(bench.main)
+    src = inspect.getsource(bench._take)
     warm_blocks = re.findall(
         r"if name in WARMUP_ROWS:\n(.*?)t0 = time\.time\(\)", src, re.S)
-    assert len(warm_blocks) == 2, "main pass + retake loop"
-    for block in warm_blocks:
-        assert ".count()" in block
-        assert "clearCache()" in block
-        # the clear comes after the warm-up action, before the clock
-        assert block.index(".count()") < block.index("clearCache()")
+    assert len(warm_blocks) == 1
+    block = warm_blocks[0]
+    assert ".count()" in block
+    assert "clearCache()" in block
+    # the clear comes after the warm-up action, before the clock
+    assert block.index(".count()") < block.index("clearCache()")
+    main_src = inspect.getsource(bench.main)
+    assert main_src.count("_take(spark, name, sf_dir)") == 2, \
+        "main pass + retake pass"
 
 
 def test_shingle_hash_memo_cap_preserves_results(spark, monkeypatch):

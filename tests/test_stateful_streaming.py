@@ -193,3 +193,30 @@ def test_streaming_funnel_state_across_batches(spark, tmp_path):
     second = {r["user_id"]: (r["r0"], r["r1"]) for r in
               _run(spark, landing, ckpt, op, "fun2", mode="update")}
     assert second == {1: (1, 1), 2: (1, 0)}
+
+
+def test_query_temp_dirs_are_removed_at_exit(tmp_path):
+    # the streaming catalog queries stage landing, stage, target and
+    # checkpoint directories that their lazy results read after the
+    # query returns; all of them sit under one per-process root, which
+    # goes when the process exits
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from restaurant_etl_code_spark.plans import testdata_queries as T\n"
+        "a = T._temp_dir('landing_')\n"
+        "b = T._temp_dir('ckpt_')\n"
+        "open(a + '/f', 'w').write('x')\n"
+        "print(T._temp_root, a, b)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": repo}
+    out = subprocess.run([sys.executable, "-c", code], env=env,
+                         capture_output=True, text=True, check=True)
+    root, a, b = out.stdout.split()
+    assert os.path.dirname(root) == str(tmp_path)
+    assert os.path.dirname(a) == root and os.path.dirname(b) == root
+    assert not os.path.exists(root)
+    assert os.listdir(tmp_path) == []

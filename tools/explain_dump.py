@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries into plans/<round>/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries into <dir>/<q>_<tag>.txt.
 
-The round directory defaults to r18; override with SPARK_GRAFT_PLANS_DIR.
+The directory defaults to the untracked .scratch/plans; override it with
+SPARK_GRAFT_PLANS_DIR. Diff two tags' dumps to compare a change's plans.
 
-Usage: [SPARK_GRAFT_PLANS_DIR=plans/rNN] python tools/explain_dump.py <tag> <query> [query ...]
+Usage: [SPARK_GRAFT_PLANS_DIR=<dir>] python tools/explain_dump.py <tag> <query> [query ...]
 """
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ def main() -> int:
     out_dir = os.environ.get(
         "SPARK_GRAFT_PLANS_DIR",
         os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "plans", "r18"))
+            os.path.abspath(__file__))), ".scratch", "plans"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("explain-dump",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
