@@ -1,10 +1,21 @@
-"""Corpus-level term statistics: TF-IDF scoring and top-term extraction.
+"""Corpus-level text operators for LLM-data curation: term statistics
+(tfidf_top_terms, repetition_signals, unigram_logprob, bigram_logprob,
+char_entropy, corpus_profile, boilerplate_ngrams, vocab_coverage),
+decontamination (contaminated_ids, decontaminate, contamination_score),
+lexical retrieval (bm25_topk, rrf_fuse), segmentation and sub-document
+dedup (chunk_documents, span_dedup, line_boilerplate_strip), selection
+and classifiers (hashed_linear_score, importance_resample,
+logreg_train_hashed, gopher_flags, score_bin_reliability,
+calibration_summary) and merge/tokenizer training (bpe_pair_stats,
+pmi_collocations, merge_adjacent_pair, phrase_merge_step, bpe_train,
+bpe_apply). They sit between the row-local text features of
+functions/text.py and the pair-level dedup of operators/dedup.py.
 
-The missing piece between per-document text features (functions/text.py:
-quality, lang-id, fingerprints — all row-local) and pair-level dedup
-(operators/dedup.py): *corpus-relative* term weighting, the workhorse for
-keyword extraction, topic labelling, and lexical retrieval over a training
-corpus.
+Shared expressions have one spelling each: ``_words`` (the non-empty token
+array), ``_word_rows`` (the exploded token stream), ``_bigrams`` and
+``_top_pair`` (adjacent pairs and the most frequent one), ``_md5_slot``
+(the md5 hashing-trick slot), ``_token_frame`` (the bpe token frame) and
+``_merge_fold`` (the codegen pair merge).
 
 Scale design (the plan at 100 TB, not just at test SF):
 
@@ -67,6 +78,73 @@ __all__ = [
     "vocab_coverage",
 ]
 
+_FOLD_BATCH = 8  # bpe_apply's fold engine checkpoints after this many merges
+
+
+def _words(text_col: str) -> Column:
+    """The document's non-empty token array."""
+    return F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "")
+
+
+def _word_rows(docs: DataFrame, text_col: str, *keep: str,
+               name: str = "term") -> DataFrame:
+    """The exploded token stream: one row per non-empty token, as ``name``,
+    after the ``keep`` columns."""
+    return docs.select(
+        *[F.col(c) for c in keep],
+        F.explode(Ftext.tokens(F.col(text_col))).alias(name),
+    ).where(F.col(name) != "")
+
+
+def _bigrams(toks: DataFrame, *keep: str) -> DataFrame:
+    """One row per adjacent token pair ``(a, b)`` of the ``tk`` array, after
+    the ``keep`` columns; ``size >= 2`` keeps the sequence ascending."""
+    return (
+        toks.filter(F.size("tk") >= 2)
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(tk) - 1), i -> "
+                    "struct(element_at(tk, i) as a, element_at(tk, i + 1) as b))"
+                )
+            ).alias("p"),
+        )
+        .select(*keep, "p.a", "p.b")
+    )
+
+
+def _top_pair(toks: DataFrame):
+    """The most frequent adjacent pair of ``tk`` as an ``(a, b, n)`` Row
+    (ties to the lexically smallest), or None when there is none."""
+    top = (
+        _bigrams(toks)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .sort(F.col("n").desc(), "a", "b")
+        .limit(1)
+        .collect()
+    )
+    return top[0] if top else None
+
+
+def _md5_slot(c: Column, n: int) -> Column:
+    """Hashing-trick slot in [0, n): the first 8 md5 hex chars as an
+    integer, portable to any SQL engine with md5."""
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % n
+
+
+def _token_frame(docs, text_col, lead, carry, emit_n_words) -> DataFrame:
+    """The bpe token frame: ``lead`` and ``carry`` columns, the PRE-merge
+    ``n_words`` (long) when asked, then ``tk``; token-less documents drop."""
+    cols = (*lead, *carry)
+    out = docs.select(
+        *[F.col(c) for c in cols], _words(text_col).alias("tk")
+    ).filter(F.size("tk") >= 1)
+    if emit_n_words:
+        out = out.select(*cols, F.size("tk").cast("long").alias("n_words"), "tk")
+    return out
+
 
 def contaminated_ids(
     corpus_docs: DataFrame,
@@ -90,21 +168,14 @@ def contaminated_ids(
     at 2^32 benchmark shingles the expected extra drop is ~1 document —
     noise against the corpus, and conservative in the safe direction.
     """
-    bench_shingles = (
-        benchmark_docs.select(
-            F.explode(
-                F.array_distinct(Ftext.word_shingles(F.col(text_col), n))
-            ).alias("shingle")
+    def shingle_hashes(df: DataFrame, *keep: str) -> DataFrame:
+        grams = F.array_distinct(Ftext.word_shingles(F.col(text_col), n))
+        return df.select(*keep, F.explode(grams).alias("shingle")).select(
+            *keep, F.xxhash64("shingle").alias("shingle_h")
         )
-        .select(F.xxhash64("shingle").alias("shingle_h"))
-        .distinct()
-    )
-    probe = corpus_docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(Ftext.word_shingles(F.col(text_col), n))).alias(
-            "shingle"
-        ),
-    ).select(id_col, F.xxhash64("shingle").alias("shingle_h"))
+
+    bench_shingles = shingle_hashes(benchmark_docs).distinct()
+    probe = shingle_hashes(corpus_docs, id_col)
     return (
         probe.join(F.broadcast(bench_shingles), "shingle_h", "left_semi")
         .select(id_col)
@@ -139,10 +210,7 @@ def tfidf_top_terms(
     """
     n_docs = docs.select(id_col).distinct().count()
 
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(Ftext.tokens(F.col(text_col))).alias("term"),
-    ).where(F.col("term") != "")
+    toks = _word_rows(docs, text_col, id_col)
 
     # (doc, term) counts and per-doc lengths in one pass over the exploded
     # stream: count per (doc, term), then a window-free rejoin via a second
@@ -199,10 +267,7 @@ def repetition_signals(
     composable with text.quality_score. Extends the reference's completeness
     predicate (SURVEY P10, batch_processor.py:572-595) into the corpus-
     statistics regime."""
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(Ftext.tokens(F.col(text_col))).alias("term"),
-    ).where(F.col("term") != "")
+    toks = _word_rows(docs, text_col, id_col)
     term_counts = toks.groupBy(id_col, "term").agg(F.count("*").alias("cnt"))
     return term_counts.groupBy(id_col).agg(
         F.sum("cnt").alias("n_tokens"),
@@ -352,10 +417,7 @@ def unigram_logprob(
 
     Returns (id, n_tokens, avg_neg_logp).
     """
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(Ftext.tokens(F.col(text_col))).alias("term"),
-    ).where(F.col("term") != "")
+    toks = _word_rows(docs, text_col, id_col)
 
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("__total"))
@@ -438,10 +500,7 @@ def bm25_topk(
     avgdl = float(stats["avgdl"])
 
     tf = (
-        docs.select(
-            F.col(id_col),
-            F.explode(Ftext.tokens(F.col(text_col))).alias("term"),
-        )
+        _word_rows(docs, text_col, id_col)
         .where(F.col("term").isin(q_terms))
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -681,11 +740,10 @@ def hashed_linear_score(
     rule label for calibration audits) — one corpus pass instead of a
     score pass + a label pass + a join back on the id.
     """
-    toks = F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "")
+    toks = _words(text_col)
 
     def weight(t):
-        h = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint")
-        return ((h % n_buckets) * F.lit(2654435761)) % modulus - (modulus // 2)
+        return (_md5_slot(t, n_buckets) * F.lit(2654435761)) % modulus - (modulus // 2)
 
     carry = carry or {}
     scored = docs.select(
@@ -703,26 +761,6 @@ def hashed_linear_score(
             .alias("score"),
         (F.col("w_sum") >= 0).alias("keep"),
         *carry,
-    )
-
-
-def _importance_resample_plan(
-    docs: DataFrame,
-    target: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 100,
-    n_buckets: int = 1024,
-    seed: int = 7,
-) -> tuple[DataFrame, DataFrame]:
-    """The LAZY plan behind ``importance_resample``: returns (topk, the
-    persisted (doc, bucket) histogram). Split out so tests can audit the
-    physical plan (broadcast log-ratio join, TakeOrdered selection) — the
-    public function executes it eagerly to release the cache."""
-    return _importance_resample_build(
-        docs, target, id_col=id_col, text_col=text_col, k=k,
-        n_buckets=n_buckets, seed=seed,
     )
 
 
@@ -771,7 +809,7 @@ def importance_resample(
 
     Returns (id_col, n_tokens, log_w, score), the ``k`` selected rows.
     """
-    topk, doc_b = _importance_resample_build(
+    topk, doc_b = _importance_resample_plan(
         docs, target, id_col=id_col, text_col=text_col, k=k,
         n_buckets=n_buckets, seed=seed,
     )
@@ -788,26 +826,25 @@ def importance_resample(
     return docs.sparkSession.createDataFrame(pdf, schema=topk.schema)
 
 
-def _importance_resample_build(
+def _importance_resample_plan(
     docs: DataFrame,
     target: DataFrame,
     *,
-    id_col: str,
-    text_col: str,
-    k: int,
-    n_buckets: int,
-    seed: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 100,
+    n_buckets: int = 1024,
+    seed: int = 7,
 ) -> tuple[DataFrame, DataFrame]:
+    """The LAZY plan behind ``importance_resample``: returns (topk, the
+    persisted (doc, bucket) histogram). Split out so tests can audit the
+    physical plan (broadcast log-ratio join, TakeOrdered selection); the
+    public function executes it eagerly to release the cache."""
     B = float(n_buckets)
 
     def buckets(df: DataFrame) -> DataFrame:
-        toks = df.select(
-            F.col(id_col), F.explode(Ftext.tokens(F.col(text_col))).alias("term")
-        ).where(F.col("term") != "")
-        return toks.select(
-            id_col,
-            (F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
-             % n_buckets).alias("__bkt"),
+        return _word_rows(df, text_col, id_col).select(
+            id_col, _md5_slot(F.col("term"), n_buckets).alias("__bkt")
         )
 
     # One tokenize pass: pre-aggregate to (doc, bucket, count) and persist
@@ -855,18 +892,7 @@ def _importance_resample_build(
     # form of the id — integer arithmetic on id_col would null out for
     # non-numeric ids and NaN for negative ones, silently degenerating the
     # draw to "k smallest ids" (found in review); md5 works for any type
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"_{seed}"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
+    u = _md5_slot(F.concat(F.col(id_col).cast("string"), F.lit(f"_{seed}")), 10000)
     gumbel = F.round(-F.log((-F.log((u + 0.5) / 10000.0))), 6)
     scored = weights.withColumn("score", F.round(F.col("log_w") + gumbel, 6))
     topk = scored.sort(F.col("score").desc(), F.col(id_col)).limit(k)
@@ -906,7 +932,7 @@ def span_dedup(
     span was seen earlier collapse to an empty string (the curation gate
     usually drops rows below a kept-fraction threshold downstream).
     """
-    toks = F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "")
+    toks = _words(text_col)
     n_spans = F.ceil(F.size(toks) / F.lit(span_tokens)).cast("int")
     spans = (
         docs.select(F.col(id_col), toks.alias("__tk"), n_spans.alias("__n"))
@@ -1045,9 +1071,7 @@ def pmi_collocations(
 
     Returns (a, b, n_ab, pmi) with deterministic (pmi desc, a, b) order.
     """
-    toks = docs.select(
-        F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "").alias("tk")
-    ).filter(F.size("tk") >= 2)
+    toks = docs.select(_words(text_col).alias("tk")).filter(F.size("tk") >= 2)
     pairs = toks.select(
         F.explode(
             F.expr(
@@ -1064,8 +1088,7 @@ def pmi_collocations(
         .filter(F.col("n_ab") >= int(min_count))
     )
     uni = (
-        docs.select(F.explode(Ftext.tokens(F.col(text_col))).alias("t"))
-        .where(F.col("t") != "")
+        _word_rows(docs, text_col, name="t")
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1117,10 +1140,7 @@ def merge_adjacent_pair(
     """
     return docs.withColumn(
         "tokens",
-        _merge_fold(
-            F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != ""),
-            a, b, joiner,
-        ),
+        _merge_fold(_words(text_col), a, b, joiner),
     )
 
 
@@ -1166,33 +1186,14 @@ def phrase_merge_step(
     TakeOrdered collect (counter-sized, the same driver touch every BPE
     trainer makes per merge); the apply is row-local codegen; the final
     count is another counter-only agg + TakeOrdered. Two corpus scans
-    total, no joins, no Python.
+    total, no joins, no Python. A corpus without an adjacent bigram
+    (empty, or one token per document) returns an empty (token, n) frame.
     """
-    tk = F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "")
-    bigrams = (
-        docs.select(tk.alias("tk"))
-        .filter(F.size("tk") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 1), i -> "
-                    "struct(element_at(tk, i) as a, element_at(tk, i + 1) as b))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-    )
-    top = (
-        bigrams.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .sort(F.col("n").desc(), "a", "b")
-        .limit(1)
-        .collect()
-    )
-    if not top:
-        raise ValueError("phrase_merge_step: corpus has no adjacent bigrams")
-    a, b = top[0]["a"], top[0]["b"]
-    retok = merge_adjacent_pair(docs, a, b, text_col=text_col)
+    top = _top_pair(docs.select(_words(text_col).alias("tk")))
+    if top is None:
+        # no document has two tokens: nothing to merge, nothing to rank
+        return docs.sparkSession.createDataFrame([], "token string, n long")
+    retok = merge_adjacent_pair(docs, top["a"], top["b"], text_col=text_col)
     return (
         retok.select(F.explode("tokens").alias("token"))
         .groupBy("token")
@@ -1258,61 +1259,26 @@ def bpe_train(
         widen_for_codec as _widen,
     )
 
-    toks = docs.select(
-        *[F.col(c) for c in carry],
-        F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "").alias("tk"),
-    ).filter(F.size("tk") >= 1)
-    if emit_n_words:
-        toks = toks.select(
-            *carry, F.size("tk").cast("long").alias("n_words"), "tk"
-        )
-    toks = _widen(toks, None, per_row="heavy")
+    toks = _widen(
+        _token_frame(docs, text_col, (), carry, emit_n_words),
+        None, per_row="heavy",
+    )
     history: list = []
     for r in range(n_merges):
-        top = (
-            toks.filter(F.size("tk") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(tk) - 1), i -> "
-                        "struct(element_at(tk, i) as a, "
-                        "element_at(tk, i + 1) as b))"
-                    )
-                ).alias("p")
-            )
-            .select("p.a", "p.b")
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .sort(F.col("n").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top:
+        top = _top_pair(toks)
+        if top is None:
             break  # corpus ran out of adjacent pairs
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        history.append((r + 1, a, b, n))
+        a, b = top["a"], top["b"]
+        history.append((r + 1, a, b, int(top["n"])))
         toks = toks.withColumn(
             "tk", _merge_fold(F.col("tk"), a, b, joiner)
         ).localCheckpoint(eager=False)
     import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     merge_table = docs.sparkSession.createDataFrame(
         pd.DataFrame(history, columns=["merge_round", "a", "b", "n"]),
-        schema=StructType(
-            [
-                StructField("merge_round", IntegerType(), False),
-                StructField("a", StringType(), False),
-                StructField("b", StringType(), False),
-                StructField("n", LongType(), False),
-            ]
-        ),
+        schema="merge_round int not null, a string not null, "
+        "b string not null, n long not null",
     )
     if return_state:
         return merge_table, toks
@@ -1325,7 +1291,6 @@ def bpe_apply(
     id_col: str = "doc_id",
     text_col: str = "text",
     joiner: str = "_",
-    inline_batch: int = 8,
     engine: str = "auto",
     carry: tuple = (),
     emit_n_words: bool = False,
@@ -1382,22 +1347,14 @@ def bpe_apply(
         raise ValueError(f"unknown engine {engine!r}")
     if engine == "auto":
         engine = "fold" if len(merges) <= 16 else "arrow"
-    out = docs.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry],
-        F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "").alias("tk"),
-    ).filter(F.size("tk") >= 1)
-    if emit_n_words:
-        out = out.select(
-            id_col, *carry, F.size("tk").cast("long").alias("n_words"), "tk"
-        )
+    out = _token_frame(docs, text_col, (id_col,), carry, emit_n_words)
     if engine == "fold":
-        for i in range(0, len(merges), inline_batch):
+        for i in range(0, len(merges), _FOLD_BATCH):
             expr = F.col("tk")
-            for a, b in merges[i : i + inline_batch]:
+            for a, b in merges[i : i + _FOLD_BATCH]:
                 expr = _merge_fold(expr, a, b, joiner)
             out = out.withColumn("tk", expr)
-            if i + inline_batch < len(merges):
+            if i + _FOLD_BATCH < len(merges):
                 out = out.localCheckpoint(eager=False)
         return out
 
@@ -1405,7 +1362,6 @@ def bpe_apply(
 
     from pyspark.sql import types as T
 
-    id_field = docs.schema[id_col]
     table = [(a, b, a + joiner + b) for a, b in merges]
 
     def mapper(batches):
@@ -1469,16 +1425,12 @@ def bpe_apply(
                                     pushed.add(j)
                                     heapq.heappush(heap, j)
                 enc.append(toks)
-            data = {id_col: pdf[id_col]}
-            for c in passthrough:
-                data[c] = pdf[c]
-            data["tk"] = pd.Series(enc, dtype=object)
-            yield pd.DataFrame(data)
+            pdf["tk"] = pd.Series(enc, index=pdf.index, dtype=object)
+            yield pdf
 
-    passthrough = list(carry) + (["n_words"] if emit_n_words else [])
+    # the token frame's own columns, with tk re-encoded
     schema = T.StructType(
-        [id_field]
-        + [out.schema[c] for c in passthrough]
+        out.schema.fields[:-1]
         + [T.StructField("tk", T.ArrayType(T.StringType()), False)]
     )
     return out.mapInPandas(mapper, schema=schema)
@@ -1526,44 +1478,27 @@ def bigram_logprob(
 
     Returns (id_col, n_bigrams, avg_neg_logp).
     """
-    toks = docs.select(
-        F.col(id_col),
-        F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != "").alias("tk"),
-    )
+    toks = docs.select(F.col(id_col), _words(text_col).alias("tk"))
     uni = toks.select(F.explode("tk").alias("t"))
     vocab = (
         uni.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
         .sort(F.col("n").desc(), "t").limit(vocab_size)
         .select(F.col("t").alias("term"), F.lit(1).alias("__in"))
     )
-    pairs0 = (
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 1), i -> "
-                    "struct(element_at(tk, i) as a0, "
-                    "element_at(tk, i + 1) as b0))"
-                )
-            ).alias("p"),
-        )
-        .select(id_col, "p.a0", "p.b0")
-    )
     # persist-and-let-LRU-evict: the pair stream feeds three consumers
     # (bigram counts, context counts, scoring); re-execution would
     # triple the corpus scan.
     pairs = (
-        pairs0
-        .join(F.broadcast(vocab.withColumnRenamed("term", "a0")
-                          .withColumnRenamed("__in", "__ina")), "a0", "left")
-        .join(F.broadcast(vocab.withColumnRenamed("term", "b0")
-                          .withColumnRenamed("__in", "__inb")), "b0", "left")
+        _bigrams(toks, id_col)
+        .join(F.broadcast(vocab.withColumnRenamed("term", "a")
+                          .withColumnRenamed("__in", "__ina")), "a", "left")
+        .join(F.broadcast(vocab.withColumnRenamed("term", "b")
+                          .withColumnRenamed("__in", "__inb")), "b", "left")
         .select(
             F.col(id_col),
-            F.when(F.col("__ina").isNotNull(), F.col("a0"))
+            F.when(F.col("__ina").isNotNull(), F.col("a"))
             .otherwise(F.lit(unk)).alias("a"),
-            F.when(F.col("__inb").isNotNull(), F.col("b0"))
+            F.when(F.col("__inb").isNotNull(), F.col("b"))
             .otherwise(F.lit(unk)).alias("b"),
         )
         .persist()
@@ -1641,15 +1576,9 @@ def logreg_train_hashed(
     join wherever ``hashed_linear_score``'s synthetic weights stand in.
     """
     spark = docs.sparkSession
-    toks = docs.select(
-        F.col(id_col),
-        F.explode(Ftext.tokens(F.col(text_col))).alias("t"),
-    ).where(F.col("t") != "")
-    slot = F.conv(F.substring(F.md5(F.col("t")), 1, 8), 16, 10).cast(
-        "bigint"
-    ) % n_buckets
     feats = (
-        toks.groupBy(F.col(id_col), slot.alias("slot"))
+        _word_rows(docs, text_col, id_col, name="t")
+        .groupBy(F.col(id_col), _md5_slot(F.col("t"), n_buckets).alias("slot"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .repartition(F.col(id_col))
         .persist()
@@ -1661,10 +1590,7 @@ def logreg_train_hashed(
     # membership (>= 1 non-empty token).
     labels = (
         docs.select(F.col(id_col), label.cast("double").alias("y"))
-        .filter(
-            F.size(F.filter(Ftext.tokens(F.col(text_col)), lambda t: t != ""))
-            > 0
-        )
+        .filter(F.size(_words(text_col)) > 0)
         .repartition(F.col(id_col))
         .persist()
     )

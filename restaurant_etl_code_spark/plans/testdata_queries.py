@@ -2385,11 +2385,7 @@ def _q_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_merge_target,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"merge_pruned_{tag}")
-    import shutil as _sh
-
-    _sh.rmtree(path, ignore_errors=True)
+    path = _temp_dir("merge_pruned_")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
@@ -3425,8 +3421,7 @@ from customer group by c_mktsegment
 
 def _q_csv_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"customer_csv_{tag}")
+    path = _temp_dir("customer_csv_")
     customer.write.mode("overwrite").option("header", True).csv(path)
     staged = spark.read.csv(path, header=True, schema=_CUSTOMER_SCHEMA)
     return _customer_format_agg(staged)
@@ -3434,8 +3429,7 @@ def _q_csv_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_json_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"customer_json_{tag}")
+    path = _temp_dir("customer_json_")
     customer.write.mode("overwrite").json(path)
     staged = spark.read.schema(_CUSTOMER_SCHEMA).json(path)
     return _customer_format_agg(staged)
@@ -3449,8 +3443,7 @@ def _q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a missing loyalty. At 100 TB this is the no-rewrite column-add —
     only footers are read to merge, no data file is touched."""
     customer = load_table(spark, sf_dir, "customer")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"customer_evo_{tag}")
+    path = _temp_dir("customer_evo_")
     v1 = customer.filter(F.col("c_custkey") % 2 == 0).select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -3493,8 +3486,7 @@ def _q_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume — the ops dashboard number. The oracle derives the same split
     from the corruption rule (c_custkey % 13) over the source table."""
     customer = load_table(spark, sf_dir, "customer")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"customer_corrupt_{tag}")
+    path = _temp_dir("customer_corrupt_")
     line = F.to_json(
         F.struct("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
     )
@@ -4181,8 +4173,7 @@ def _q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"events_zorder_{tag}")
+    path = _temp_dir("events_zorder_")
     layout.zorder_layout(events, ["user_id", "value"], 16).write.mode(
         "overwrite"
     ).parquet(path)
@@ -4261,13 +4252,12 @@ def _q_mdb_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_retailprice") > 1000).alias("Taxe2"),
         F.col("p_retailprice").cast("double").alias("PrixVente"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = os.path.join(_SCRATCH_DIR, f"mdb_csv_{tag}")
+    stage = _temp_dir("mdb_csv_")
     grocery.coalesce(1).write.mode("overwrite").option("header", True).csv(stage)
     csv_file = _glob.glob(os.path.join(stage, "part-*.csv"))[0]
     with open(csv_file, encoding="utf-8") as f:
         csv_text = f.read()
-    mdb_path = os.path.join(_SCRATCH_DIR, f"catalog_{tag}.mdb")
+    mdb_path = os.path.join(_temp_dir("mdb_"), "catalog.mdb")
     mdb_src.write_fake_mdb(
         mdb_path,
         {"Fournisseurs": "FournisseurID\n1\n", "Articles": csv_text},
@@ -5023,8 +5013,7 @@ def _q_orc_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrips — the oracle aggregates the original parquet, so any
     serialization loss hash-mismatches."""
     customer = load_table(spark, sf_dir, "customer")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"customer_orc_{tag}")
+    path = _temp_dir("customer_orc_")
     customer.write.mode("overwrite").orc(path)
     staged = spark.read.schema(_CUSTOMER_SCHEMA).orc(path)
     return _customer_format_agg(staged)
@@ -5128,8 +5117,7 @@ def _q_stats_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(_SCRATCH_DIR, f"events_ranged_{tag}")
+    path = _temp_dir("events_ranged_")
     (
         events.repartitionByRange(16, "user_id")
         .sortWithinPartitions("user_id")
@@ -11334,9 +11322,7 @@ def _q_wet_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit("/"), F.col("doc_id").cast("string")).alias("url"),
         F.col("text").alias("payload"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(_SCRATCH_DIR, f"wet_export_{tag}")
-    shutil.rmtree(out, ignore_errors=True)  # stale shards would pollute
+    out = _temp_dir("wet_export_")
     Fwarc.write_warc(staged.repartition(8), out, gzip_members=True)
     back = Fwarc.read_warc(spark, out)
     shaped = back.filter(F.col("warc_type") == "conversion").select(
@@ -12881,9 +12867,7 @@ def _q_wat_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("payload_digest").alias("digest"),
         )).alias("payload"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(_SCRATCH_DIR, f"wat_export_{tag}")
-    shutil.rmtree(out, ignore_errors=True)  # stale shards would pollute
+    out = _temp_dir("wat_export_")
     Fwarc.write_warc(meta.repartition(4), out, warc_type="metadata",
                      content_type="application/json", gzip_members=True)
     back = Fwarc.read_warc(spark, out).filter(
@@ -13323,8 +13307,7 @@ def _q_warc_revisit_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("digest") == F.col("prev_digest"),
                F.col("prev_id")).alias("revisit_of"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(_SCRATCH_DIR, f"warc_revisit_{tag}")
+    out = _temp_dir("warc_revisit_")
     # size-targeted sharding (r14 verdict order 7): shard count comes
     # from the dump's estimated bytes via plan_shard_count, not a
     # hard-coded partition number — the knob a 100 TB export turns

@@ -583,7 +583,7 @@ def test_streaming_cdc_apply_converges_to_batch_snapshot(spark, tmp_path):
 
 # ------------------------------------- code-review regression coverage
 
-def test_truncated_containers_raise_not_corrupt(spark):
+def test_truncated_containers_raise_not_corrupt(spark, tmp_path):
     """Truncated byte containers must surface as decode errors, never as
     silently shortened payloads (corpus poisoning / silent row loss)."""
     blob = mm.encode_paged_pdf(["hello world", "page two"])
@@ -598,13 +598,9 @@ def test_truncated_containers_raise_not_corrupt(spark):
     import pytest as _pytest
 
     csv = "A,B\n1,2\n"
-    import tempfile
-
-    with tempfile.NamedTemporaryFile(suffix=".mdb", delete=False) as f:
-        mdb.write_fake_mdb(f.name, {"T": csv})
-        path = f.name
-    with open(path, "rb") as fh:
-        raw = fh.read()
+    path = tmp_path / "t.mdb"
+    mdb.write_fake_mdb(str(path), {"T": csv})
+    raw = path.read_bytes()
     with _pytest.raises(ValueError, match="truncated"):
         mdb.FakeMdbExtractor()(raw[:-3], "T")
 

@@ -235,18 +235,6 @@ def test_bpe_apply_replays_merges_in_order(spark):
     assert out == {1: ["a_b", "a_b_c"], 2: ["a_b_c", "c"]}  # doc 3 dropped
 
 
-def test_bpe_apply_checkpoint_batches_match_inline(spark):
-    from restaurant_etl_code_spark.operators import corpus
-
-    docs = spark.createDataFrame(
-        [(i, "x y z w x y") for i in range(20)], "doc_id bigint, text string"
-    )
-    merges = [("x", "y"), ("z", "w"), ("x_y", "z_w")]
-    a = corpus.bpe_apply(docs, merges, inline_batch=8).collect()
-    b = corpus.bpe_apply(docs, merges, inline_batch=1).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_bigram_logprob_separates_fluent_from_shuffled(spark):
     from restaurant_etl_code_spark.operators import corpus
 
