@@ -42,7 +42,8 @@ def embedding_moments(df: DataFrame, *, vec_col: str = "embedding",
                       dim: int) -> DataFrame:
     """Mean vector + population covariance matrix of an embedding column,
     exact (see module docstring). Returns the upper triangle as rows
-    (i ≤ j): (i, j, n, mean_i, mean_j, cov) — d(d+1)/2 rows total."""
+    (i ≤ j): (i, j, n, mean_i, mean_j, cov) — d(d+1)/2 rows total, none
+    on empty input."""
     # Every expression below is generated as a SQL STRING and handed to
     # selectExpr/F.expr in a handful of py4j calls: the Column-tree
     # formulation this replaces issued ~1000 py4j round-trips for the
@@ -67,7 +68,7 @@ def embedding_moments(df: DataFrame, *, vec_col: str = "embedding",
         f"named_struct('i', {i}, 'j', {j})"
         for i in range(dim) for j in range(i, dim)
     ) + ")"
-    exploded = one.select("*", F.explode(F.expr(pairs)).alias("ij"))
+    exploded = one.where("n > 0").select("*", F.explode(F.expr(pairs)).alias("ij"))
     s_arr = "array(" + ",".join(
         f"cast(s{i} as double)" for i in range(dim)
     ) + ")"
@@ -105,10 +106,12 @@ def pca_fit(df: DataFrame, *, vec_col: str = "embedding", dim: int,
     descending eigenvalue with a deterministic sign convention (largest-
     magnitude entry positive — eigenvectors are sign-ambiguous otherwise).
     Returns (mean: list[d], components: k×d list-of-lists,
-    explained_variance: list[k])."""
+    explained_variance: list[k]); raises ValueError on empty input."""
     import numpy as np
 
     rows = embedding_moments(df, vec_col=vec_col, dim=dim).collect()
+    if not rows:
+        raise ValueError("pca_fit: empty input, no embeddings to fit")
     C = np.zeros((dim, dim))
     mean = np.zeros(dim)
     for r in rows:

@@ -2619,8 +2619,10 @@ def _q_distinct_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     Collected as a sorted join-string + count so the driver's scalar value-hash
     can check it (the in-engine form is `collect_set`)."""
     part = load_table(spark, sf_dir, "part")
+    types = F.collect_set("p_type")
+    # NULL on empty input, as string_agg; a lone '' category stays ''
     return part.agg(
-        F.concat_ws(",", F.array_sort(F.collect_set("p_type"))).alias("categories"),
+        F.when(F.size(types) > 0, F.concat_ws(",", F.array_sort(types))).alias("categories"),
         F.countDistinct("p_type").alias("n_categories"),
     )
 

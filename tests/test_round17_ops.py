@@ -285,14 +285,14 @@ def test_cdc_chunks_xxhash_path_stays_jvm(spark):
     """The xxhash64 fast path must keep the pure-JVM codegen plan (no
     Python node) while md5 takes the Arrow stage."""
     from restaurant_etl_code_spark.operators.chunking import cdc_chunks
+    from tools.explain_audit import plan_failures
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h i j k l")], "doc_id long, text string")
     md5_plan = cdc_chunks(docs)._jdf.queryExecution().executedPlan().toString()
-    xx_plan = cdc_chunks(docs, boundary_hash="xxhash64")._jdf.queryExecution(
-    ).executedPlan().toString()
     assert "MapInPandas" in md5_plan
-    assert "MapInPandas" not in xx_plan and "BatchEvalPython" not in xx_plan
+    xx = cdc_chunks(docs, boundary_hash="xxhash64")
+    assert plan_failures("cdc_chunks_xxhash64", xx, {}) == []
 
 
 # ---------------- bpe_apply carry= / emit_n_words= (fold and arrow engines)

@@ -372,6 +372,7 @@ def test_importance_resample_lazy_plan_shape(spark):
     the audit twin of the explain_audit entry (which can only see the
     post-execution k-row local result)."""
     from restaurant_etl_code_spark.operators import corpus
+    from tools.explain_audit import plan_failures
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta doc{i}") for i in range(30)], "doc_id int, text string"
@@ -381,11 +382,8 @@ def test_importance_resample_lazy_plan_shape(spark):
     )
     topk, doc_b = corpus._importance_resample_plan(docs, target, k=5)
     try:
-        plan = topk._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        assert "BroadcastHashJoin" in plan
-        assert "BatchEvalPython" not in plan
-        assert "CartesianProduct" not in plan
+        want = ["TakeOrderedAndProject", "BroadcastHashJoin"]
+        assert plan_failures("importance_resample", topk, {"want": want}) == []
     finally:
         doc_b.unpersist()
 
